@@ -5,19 +5,24 @@ order-insensitive value comparison. Catches session-drift regressions
 (e.g. ANSI-unsafe casts) that the repo-session pytest can mask.
 
 Usage: python scripts/driver_parity_check.py  (prints OK/FAIL per query;
-exit status is nonzero when any query fails)."""
+exit status is nonzero when any query fails). Runs at local[$SPARK_GRAFT_CPUS]
+(default: the usable core count) with the engine's host-fitted heap
+(session.local_driver_memory)."""
 import math, os, sys, traceback
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from pyspark.sql import SparkSession
 
+from takco_spark.session import local_driver_memory
+
 SF = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.01")
 TABLES = ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]
 
-spark = (SparkSession.builder.master("local[32]")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+spark = (SparkSession.builder.master(f"local[{CPUS}]")
          .config("spark.sql.shuffle.partitions","32")
-         .config("spark.driver.memory","48g")
+         .config("spark.driver.memory", local_driver_memory())
          .getOrCreate())
 print("ansi:", spark.conf.get("spark.sql.ansi.enabled"))
 

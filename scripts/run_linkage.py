@@ -167,10 +167,7 @@ def run(args: argparse.Namespace) -> dict:
     stats = {
         "run_id": args.run_id,
         "output": args.output,
-        "config": {
-            k: v for k, v in dataclasses.asdict(cfg).items()
-            if k not in ("extra",)
-        },
+        "config": dataclasses.asdict(cfg),
         "stats": result.stats,
     }
     print(json.dumps(stats, default=str))

@@ -8,7 +8,7 @@ This dataclass is the Spark-native equivalent: plain values, no reflection.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass
@@ -134,11 +134,8 @@ class PipelineConfig:
     # --- checkpointing ------------------------------------------------------
     checkpoint_dir: str | None = None
     run_id: str = "run0"
-    #: stage names that are checkpointed when checkpoint_dir is set.
-    checkpoint_stages: tuple[str, ...] = ("blocks", "pairs_scored", "components")
     # --- misc ---------------------------------------------------------------
     seed: int = 42
-    extra: dict = field(default_factory=dict)
 
     @property
     def lsh_rows_per_band(self) -> int:

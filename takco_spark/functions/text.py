@@ -32,28 +32,6 @@ def distinct_tokens(col: Column | str, min_len: int = 1) -> Column:
     return F.array_distinct(c)
 
 
-def strip_numeric(col: Column | str) -> Column:
-    """Strip number formatting chars before numeric casting.
-
-    Reference: /root/reference/takco/cluster/matchers/lsh.py:125 (strip
-    ``-.,%``) and /root/reference/takco/link/types.py:86-91 (unicode minus).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.regexp_replace(c, "−", "-"), r"[.,%\s]", "")
-
-
-def is_numeric_text(col: Column | str) -> Column:
-    """1 if the cell text is numeric after stripping formatting (the cell-level
-    predicate under takco's numeric-column rule,
-    /root/reference/takco/cluster/matchers/lsh.py:122-128)."""
-    stripped = F.regexp_replace(
-        F.regexp_replace(F.col(col) if isinstance(col, str) else col, "−", "-"),
-        r"[-.,%\s]",
-        "",
-    )
-    return (stripped.rlike(r"^[0-9]+$")).cast("int")
-
-
 def year_extract(col: Column | str) -> Column:
     """Extract a 4-digit year (possibly a range prefix) or empty string."""
     c = F.col(col) if isinstance(col, str) else col

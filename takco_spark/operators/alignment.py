@@ -1,4 +1,4 @@
-"""Greedy 1:1 alignment + soft-Jaccard aggregation (SURVEY.md A5).
+"""Greedy 1:1 alignment total (SURVEY.md A5).
 
 Reference semantics (greedy_align + aggregate_aligned_column_sims,
 /root/reference/takco/cluster/cluster.py:246-345): within each candidate pair,
@@ -7,54 +7,19 @@ sort sub-item similarity scores descending and greedily pick 1:1 matches
 is t / (n1 + n2 - t) ("jacc" mode) or t / max(n1,n2) / min(n1,n2) variants,
 where t = Σ matched scores.
 
-The greedy scan is sequential WITHIN a pair but independent ACROSS pairs —
-exactly the applyInPandas shape: parallel per-group, vectorized sort inside.
-Tie-breaks replicate the reference's sorted-iteration order: (-score, left,
-right), so outputs are deterministic.
+The greedy scan is sequential WITHIN a pair but independent ACROSS pairs:
+scoring.aggregate_aligned packs each pair's cells into one collect_list row
+and :func:`greedy_total_udf` scans a whole Arrow batch of pairs per call; the
+width normalization is JVM arithmetic there. Tie-breaks replicate the
+reference's sorted-iteration order: (-score, left, right), so outputs are
+deterministic.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
-
-ALIGN_SCHEMA = (
-    "pair_id string, left_item string, right_item string, score double"
-)
-
-AGG_SCHEMA = (
-    "pair_id string, total double, n_matched int, agg_jacc double, "
-    "agg_max double, agg_min double"
-)
-
-
-def _greedy_one(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values(
-        ["score", "left_item", "right_item"], ascending=[False, True, True],
-        kind="mergesort",
-    )
-    used_l: set = set()
-    used_r: set = set()
-    keep = []
-    for idx, l, r in zip(pdf.index, pdf["left_item"], pdf["right_item"]):
-        if l in used_l or r in used_r:
-            continue
-        used_l.add(l)
-        used_r.add(r)
-        keep.append(idx)
-    return pdf.loc[keep, ["pair_id", "left_item", "right_item", "score"]]
-
-
-def greedy_align(scores: DataFrame) -> DataFrame:
-    """scores(pair_id, left_item, right_item, score) → the greedy 1:1
-    matching per pair_id."""
-
-    return scores.groupBy("pair_id").applyInPandas(_greedy_one, ALIGN_SCHEMA)
 
 
 def _greedy_total_one(arr) -> float:
@@ -83,30 +48,4 @@ def greedy_total_udf(cells: pd.Series) -> pd.Series:
     per pair — pairs stream through as Arrow batches."""
     return pd.Series(
         [0.0 if a is None else _greedy_total_one(a) for a in cells]
-    )
-
-
-def aligned_pair_scores(scores: DataFrame, widths: DataFrame) -> DataFrame:
-    """Aggregate the greedy matching into pair-level similarities.
-
-    widths(pair_id, n1, n2) carries each side's item count (the reference
-    broadcasts per-table column counts, cluster.py:320-327). Returns all three
-    normalizations: jacc = t/(n1+n2-t), max = t/max, min = t/min.
-    """
-    matched = greedy_align(scores)
-    agg = matched.groupBy("pair_id").agg(
-        F.sum("score").alias("total"), F.count("*").cast("int").alias("n_matched")
-    )
-    return (
-        agg.join(F.broadcast(widths), "pair_id")
-        .select(
-            "pair_id",
-            "total",
-            "n_matched",
-            (F.col("total") / (F.col("n1") + F.col("n2") - F.col("total"))).alias(
-                "agg_jacc"
-            ),
-            (F.col("total") / F.greatest("n1", "n2")).alias("agg_max"),
-            (F.col("total") / F.least("n1", "n2")).alias("agg_min"),
-        )
     )

@@ -22,6 +22,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from takco_spark.operators.grouped import split_oversized
+
 
 @dataclass
 class CCResult:
@@ -190,10 +192,7 @@ def rechunk_oversized(labels: DataFrame, max_cluster_size: int) -> DataFrame:
         return labels
     from pyspark.sql import Window
 
-    sizes = labels.groupBy("cluster_id").agg(F.count("*").alias("csize"))
-    big_ids = sizes.where(F.col("csize") > max_cluster_size).select("cluster_id")
-    big = labels.join(F.broadcast(big_ids), "cluster_id")
-    small = labels.join(F.broadcast(big_ids), "cluster_id", "left_anti")
+    small, big = split_oversized(labels, "cluster_id", max_cluster_size)
     w = Window.partitionBy("cluster_id").orderBy("doc_id")
     big_sliced = big.withColumn(
         "cluster_id",

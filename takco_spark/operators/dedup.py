@@ -73,15 +73,6 @@ def char_shingle_arrays(documents: DataFrame, id_col: str = "doc_id",
     )
 
 
-def char_shingles(documents: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", k: int = 5) -> DataFrame:
-    """(doc_id, shingle): long-format view of :func:`char_shingle_arrays`
-    (the shape the sum-product Jaccard join consumes)."""
-    return char_shingle_arrays(documents, id_col, text_col, k).select(
-        "doc_id", F.explode("shingles").alias("shingle")
-    )
-
-
 def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.5,
                         id_col: str = "doc_id", text_col: str = "text",
                         k: int = 5, max_df: int | None = None) -> DataFrame:

@@ -18,14 +18,14 @@ from those moves. Louvain communities are therefore always subsets of
 connected components. We exploit that: the scalable large-star/small-star CC
 (one groupBy + one join per round) computes the component partition, then the
 standard sequential multilevel Louvain runs **independently inside each
-component** via one cogroup ``applyInPandas`` — the same distribution pattern
-as G3 refinement (operators/refine.py), with members and sims each shuffling
-once as rows. One subtlety makes this exact rather than approximate: the
-null-model term couples components through the GLOBAL total weight 2m, so a
-single scalar aggregate computes 2m over all pairs up front and every
-component kernel receives it as a constant (total weight is invariant under
-Louvain coarsening, so one value serves all levels) — with a shared m,
-components still never interact, and the per-component union is
+component** — one bundle row per component and one vectorized UDF over the
+bundles (operators/grouped.bundle_apply), the same distribution pattern as G3
+refinement (operators/refine.py). One subtlety makes this exact rather than
+approximate: the null-model term couples components through the GLOBAL total
+weight 2m, so a single scalar aggregate computes 2m over all pairs up front
+and every component kernel receives it as a constant (total weight is
+invariant under Louvain coarsening, so one value serves all levels) — with a
+shared m, components still never interact, and the per-component union is
 byte-identical to a whole-graph sequential run
 (tests/test_louvain.py::test_distributed_matches_sequential_exactly).
 
@@ -47,13 +47,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from takco_spark.operators.components import CCResult, connected_components
-
-LOUVAIN_SCHEMA = "doc_id string, component_id string, cluster_id string"
+from takco_spark.operators.grouped import bundle_apply, split_oversized
 
 
 def louvain_phase1(
@@ -179,7 +177,6 @@ def louvain_clusters(
     docstring). cluster_id = min doc_id of the Louvain community. Components
     larger than ``max_component_size`` keep their CC label (observable skip).
     """
-    spark = pair_sims.sparkSession
     exp = float(edge_exp)
     # global 2m for the modularity null-model term, with the same per-pair
     # max-dedup the kernel applies; computed over ALL pairs (including those
@@ -202,70 +199,14 @@ def louvain_clusters(
         F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
     )
     cc = connected_components(edges, max_cc_iterations)
-    # labels are scanned by the size guard and both cogroup sides
-    comp = cc.labels.withColumnRenamed("cluster_id", "component_id").persist()
-
-    sizes = comp.groupBy("component_id").agg(F.count("*").alias("_csize"))
-    big_ids = sizes.where(F.col("_csize") > max_component_size).select(
-        "component_id"
+    # labels are scanned by the size split and both bundle sides
+    comp = cc.labels.persist()
+    members, big = split_oversized(comp, "cluster_id", max_component_size)
+    grouped = bundle_apply(
+        members, pair_sims, "cluster_id",
+        lambda items, sims, _: louvain_partition(sims, edge_exp=exp, m2=m2),
     )
-    passthrough = comp.join(F.broadcast(big_ids), "component_id").select(
-        "doc_id", "component_id", F.col("component_id").alias("cluster_id")
-    )
-    members = comp.join(F.broadcast(big_ids), "component_id", "left_anti")
-
-    comp_of_1 = members.select(
-        F.col("doc_id").alias("doc_id_1"), "component_id"
-    )
-    sims_side = (
-        pair_sims.join(comp_of_1, "doc_id_1")
-        .select(
-            F.col("component_id").alias("_cid"),
-            "doc_id_1",
-            "doc_id_2",
-            "agg_sim",
-        )
-    )
-
-    def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:  # sims keyed to a guarded-out component
-            return pd.DataFrame(
-                {"doc_id": [], "component_id": [], "cluster_id": []}
-            )
-        component_id = left["component_id"].iloc[0]
-        edge_sims: dict = {}
-        for a, b, s in zip(
-            right["doc_id_1"], right["doc_id_2"], right["agg_sim"]
-        ):
-            key = (a, b) if a < b else (b, a)
-            # parallel edges (same pair from several blocks): keep the max
-            # sim, matching scoring's per-pair dedup semantics
-            edge_sims[key] = max(edge_sims.get(key, 0.0), float(s))
-        assign = louvain_partition(edge_sims, edge_exp=exp, m2=m2)
-        items = left["doc_id"].tolist()
-        return pd.DataFrame(
-            {
-                "doc_id": items,
-                "component_id": [component_id] * len(items),
-                # a member with no surviving edge rows (shouldn't happen —
-                # CC membership implies an edge — but a dropped-dup race is
-                # cheap to defend): it is its own community
-                "cluster_id": [assign.get(x, x) for x in items],
-            }
-        )
-
-    # one COGROUP per component: members and sims each shuffle ONCE as rows
-    # (same shape and AQE-coalescing defense as refine_clusters — per-group
-    # cost is Python compute on few bytes, so pin the partition count)
-    par = spark.sparkContext.defaultParallelism
-    grouped = (
-        members.repartition(par, "component_id")
-        .groupBy("component_id")
-        .cogroup(sims_side.repartition(par, "_cid").groupBy("_cid"))
-        .applyInPandas(run, LOUVAIN_SCHEMA)
-    )
-    labels = (
-        grouped.unionByName(passthrough)
-        .select("doc_id", "cluster_id")
-    )
+    labels = grouped.select(
+        "doc_id", F.col("label").alias("cluster_id")
+    ).unionByName(big.select("doc_id", "cluster_id"))
     return LouvainResult(labels=labels, cc=cc)

@@ -8,19 +8,19 @@ AgglomerativeClustering per partition).
 
 Spark shape: connected components give coarse partitions (bounded by the
 max-cluster-size rechunk, G2); each partition's refinement is an independent
-small problem → ``applyInPandas`` per component, a self-contained numpy
-complete-linkage inside (no sklearn in this environment — the linkage loop is
-O(k³) on k ≤ max_cluster_size items, which the G2 bound keeps tiny).
+small problem → one bundle row per cluster and one vectorized UDF over the
+bundles (operators/grouped.bundle_apply, shared with Louvain), with a
+self-contained complete-linkage inside (no sklearn in this environment — the
+linkage loop is O(k³) on k ≤ max_cluster_size items, which the G2 bound keeps
+tiny).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-REFINE_SCHEMA = "doc_id string, cluster_id string, refined_id string"
+from takco_spark.operators.grouped import bundle_apply, split_oversized
 
 
 def _complete_linkage(items: list[str], sims: dict[tuple[str, str], float],
@@ -83,112 +83,33 @@ def refine_clusters(
 
     Size guard: a coarse cluster with more than ``max_group_size`` members
     (a giant component — the known CC failure mode on a too-loose threshold)
-    would pack O(k²) sims into one applyInPandas group and run an O(k³)
-    linkage; such clusters PASS THROUGH unrefined (refined_id =
-    '{cluster_id}/0'). The skip is observable via
-    :func:`oversized_refine_stats` — never silent.
+    would pack O(k²) sims into one bundle row and run an O(k³) linkage; such
+    clusters PASS THROUGH unrefined (refined_id = '{cluster_id}/0'). The skip
+    is observable via :func:`oversized_refine_stats` — never silent.
     ``max_group_size=None`` disables the guard entirely — for callers that
     ALREADY bound every cluster (the pipeline runs refine after the G2
     rechunk, whose slices can never exceed ``cfg.max_cluster_size``, so the
     guard's sizes scan and the two broadcast joins would drop exactly
     nothing; r6 measured them as pure fixed cost on the aligned headline).
     """
-    if max_group_size is None:
-        passthrough = None
-    else:
-        sizes = labels.groupBy("cluster_id").agg(F.count("*").alias("_csize"))
-        big_ids = sizes.where(
-            F.col("_csize") > max_group_size).select("cluster_id")
-        passthrough = labels.join(F.broadcast(big_ids), "cluster_id").select(
+    passthrough = None
+    if max_group_size is not None:
+        labels, big = split_oversized(labels, "cluster_id", max_group_size)
+        passthrough = big.select(
             "doc_id",
             "cluster_id",
             F.concat(F.col("cluster_id"), F.lit("/0")).alias("refined_id"),
         )
-        labels = labels.join(F.broadcast(big_ids), "cluster_id", "left_anti")
-    l1 = labels.select(
-        F.col("doc_id").alias("doc_id_1"), F.col("cluster_id")
-    )
-    sims_in_cluster = (
-        pair_sims.join(l1, "doc_id_1")
-        .select("cluster_id", "doc_id_1", "doc_id_2", "agg_sim")
-    )
-    cols = ["doc_id", "cluster_id"] + ([source_col] if source_col else [])
-    members = labels.select(*cols)
-
-    # One BUNDLE ROW per coarse cluster on each side (collect_list over the
-    # cluster key), joined cluster-to-cluster — members and sims still each
-    # shuffle exactly once and nothing is duplicated (the join is 1:1 on the
-    # cluster key; only joining sims onto MEMBER rows would copy the O(k²)
-    # payload k times). Group payload stays bounded by max_group_size. The r5
-    # shape was a per-cluster applyInPandas COGROUP, which constructs and
-    # validates a pandas frame pair + a result frame PER GROUP — measured
-    # 33 core-s for 3,000 tiny groups at sf0.1 (~11 ms/group of pure
-    # per-group overhead, the dominant node of the whole aligned save
-    # phase). The bundled form runs ONE vectorized UDF call per ~10k
-    # clusters; the per-cluster Python is just the linkage itself.
-    mem_struct = (
-        F.struct(F.col("doc_id"), F.col(source_col).alias("src"))
-        if source_col
-        else F.struct(F.col("doc_id"))
-    )
-    sims_b = sims_in_cluster.groupBy("cluster_id").agg(
-        F.collect_list(
-            F.struct("doc_id_1", "doc_id_2", "agg_sim")
-        ).alias("simrows")
-    )
-
-    def refine_batch(mem: pd.Series, simrows: pd.Series) -> pd.Series:
-        out = []
-        for m, sr in zip(mem, simrows):
-            items = [r["doc_id"] for r in m]
-            forbid = (
-                {r["doc_id"]: r["src"] for r in m} if source_col else {}
-            )
-            sims: dict[tuple[str, str], float] = {}
-            if sr is not None:
-                for r in sr:
-                    a, b = r["doc_id_1"], r["doc_id_2"]
-                    key = (a, b) if a < b else (b, a)
-                    s = float(r["agg_sim"])
-                    if key not in sims or s > sims[key]:
-                        sims[key] = s
-            assign = _complete_linkage(items, sims, forbid, threshold)
-            out.append([assign[x] for x in items])
-        return pd.Series(out)
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    refine_udf = pandas_udf(refine_batch, ArrayType(IntegerType()))
-    # Pin the bundle shuffle's partition count: per-row cost is O(k³) PYTHON
-    # compute on a few hundred BYTES, so AQE's byte-based coalescing would
-    # collapse the stage to a few tasks (the r5 note: a measured 7.3 s
-    # single-task stage at sf0.1). The explicit keyed repartition is exempt
-    # from coalescing and is reused by the groupBy (same hash partitioning,
-    # same count), so it costs no extra shuffle; defaultParallelism is the
-    # deployment's tasks-per-core sizing. A left join keeps sims-less
-    # clusters (all-singleton split), and sims-only bundles — sims whose
-    # cluster has no member rows — drop, exactly as the cogroup did.
-    par = members.sparkSession.sparkContext.defaultParallelism
-    bundle = (
-        members.repartition(par, "cluster_id")
-        .groupBy("cluster_id")
-        .agg(F.collect_list(mem_struct).alias("mem"))
-        .join(sims_b, "cluster_id", "left")
-        .withColumn("assign", refine_udf("mem", "simrows"))
-        .select(
-            "cluster_id",
-            F.col("mem.doc_id").alias("ids"),
-            F.col("assign"),
-        )
-    )
-    grouped = bundle.select(
-        "cluster_id", F.explode(F.arrays_zip("ids", "assign")).alias("z")
+    grouped = bundle_apply(
+        labels, pair_sims, "cluster_id",
+        lambda items, sims, forbid: _complete_linkage(
+            items, sims, forbid, threshold),
+        attr_col=source_col,
     ).select(
-        F.col("z.ids").alias("doc_id"),
+        "doc_id",
         "cluster_id",
         F.concat(F.col("cluster_id"), F.lit("/"),
-                 F.col("z.assign").cast("string")).alias("refined_id"),
+                 F.col("label")).alias("refined_id"),
     )
     if passthrough is None:
         return grouped

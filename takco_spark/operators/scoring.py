@@ -28,9 +28,6 @@ from takco_spark.functions.aggexpr import compile_agg_expr
 from takco_spark.functions.similarity import jaro_winkler_udf
 from takco_spark.functions.text import jaccard_tokens, levenshtein_sim
 
-SCORE_COLUMNS = ("jaccard", "lev_sim", "jw", "tfidf_cos")
-
-
 def tfidf_weights(features: DataFrame) -> DataFrame:
     """(doc_id, tokens) → (doc_id, token, w) with L2-normalized tf-idf.
 

@@ -69,6 +69,33 @@ DEFAULT_CONFS: dict[str, str] = {
 }
 
 
+def fit_driver_memory(mem_total_kb: int | None) -> str:
+    """Local-mode default ``spark.driver.memory`` for a host with
+    ``mem_total_kb`` of RAM: half of it, at most 24g (24g when unknown).
+    Every local "executor" thread lives in this one JVM, so a heap cap above
+    what the host can back gets the JVM OOM-killed instead of collected."""
+    if not mem_total_kb:
+        return "24g"
+    return f"{min(24 * 1024, mem_total_kb // 2048)}m"
+
+
+def local_driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else :func:`fit_driver_memory` of this
+    host's MemTotal."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    mem_total_kb = None
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    mem_total_kb = int(line.split()[1])
+    except OSError:
+        pass
+    return fit_driver_memory(mem_total_kb)
+
+
 def _default_master() -> str:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     return os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -143,7 +170,9 @@ def get_spark(
     # In local mode every "executor" thread lives in the driver JVM — the 1g
     # default heap causes GC collapse at high parallelism. Only effective for
     # the process's FIRST JVM (bench runs each parallelism level in a fresh
-    # process for exactly this reason). 24g default (r6 — was 48g, which the
+    # process for exactly this reason). Half of physical RAM, at most 24g: a
+    # 24g heap on a 15 GB host let the test JVM grow until the OOM killer
+    # removed it. The 24g ceiling (r6 — was 48g, which the
     # measurements never supported): the committed interleaved A/B
     # (BENCH/mem_ab_d{600000,960000}.json, local[4]) has 24g ~25% FASTER at
     # 600k docs and a wash at 960k, and r6 local[32] headline sessions at
@@ -161,9 +190,7 @@ def get_spark(
         # local-mode-only: under spark-submit the driver/executor memory is
         # the submitter's call (--driver-memory/--executor-memory), and
         # setting spark.driver.memory after JVM start is a no-op anyway
-        confs["spark.driver.memory"] = os.environ.get(
-            "SPARK_GRAFT_DRIVER_MEM", "24g"
-        )
+        confs["spark.driver.memory"] = local_driver_memory()
     if shuffle_partitions is None and master.startswith("local-cluster["):
         # local-cluster[nExec, coresPerExec, memMB]: REAL separate executor
         # JVMs on one host (Spark's standalone test mode) — the closest

@@ -83,10 +83,6 @@ def write_documents_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> 
     df.write.mode(mode).json(path)
 
 
-def read_documents_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None,
                 mode: str = "overwrite") -> None:
     """Artifact store (S6): parquet (Iceberg ``writeTo`` when a catalog is

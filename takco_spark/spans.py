@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SPAN_KINDS = ("cell", "header", "mention", "media")
-
 SPANS_TYPE = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 
 DOCUMENT_SCHEMA = f"doc_id string, spans {SPANS_TYPE}"

@@ -43,9 +43,10 @@ def _sims_df(spark, sims):
 
 
 def test_distributed_matches_sequential_exactly(spark):
-    """The per-component cogroup produces byte-identical labels to running
-    the sequential kernel on the whole graph (min-member labels both sides;
-    Louvain never moves across components, so per-component == global)."""
+    """The per-component bundle kernel produces byte-identical labels to
+    running the sequential kernel on the whole graph (min-member labels both
+    sides; Louvain never moves across components, so per-component ==
+    global)."""
     sims, _ = _planted_multi_component()
     seq = louvain_partition(sims, edge_exp=6.0)
     got = {

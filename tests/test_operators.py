@@ -92,36 +92,49 @@ def test_stitch_clusters_rebases_offsets(spark):
 
 # --- alignment ---------------------------------------------------------------
 
-def test_greedy_align_reference_semantics(spark):
-    # scores where naive max-per-left would double-use right item r1
-    rows = [
-        ("p", "l1", "r1", 0.9),
-        ("p", "l2", "r1", 0.8),
-        ("p", "l2", "r2", 0.5),
-        ("p", "l3", "r3", 0.4),
-    ]
-    df = spark.createDataFrame(rows, ["pair_id", "left_item", "right_item", "score"])
-    got = {(r["left_item"], r["right_item"]): r["score"]
-           for r in alignment.greedy_align(df).collect()}
-    assert got == {("l1", "r1"): 0.9, ("l2", "r2"): 0.5, ("l3", "r3"): 0.4}
+def _aligned_totals(spark, cells, n1, n2, norm):
+    """aggregate_aligned in greedy mode over one pair's (l, r, s) cells,
+    with n1 / n2 segments on each side."""
+    from takco_spark.config import PipelineConfig
+    from takco_spark.operators.scoring import aggregate_aligned
 
-    widths = spark.createDataFrame([("p", 3, 3)], ["pair_id", "n1", "n2"])
-    agg = alignment.aligned_pair_scores(df, widths).collect()[0]
+    sub = spark.createDataFrame(
+        [("A", "B", "k", l, r, s) for l, r, s in cells],
+        "doc_id_1 string, doc_id_2 string, block_key string, "
+        "l int, r int, s double",
+    )
+    seg = spark.createDataFrame(
+        [("A", i) for i in range(n1)] + [("B", i) for i in range(n2)],
+        "doc_id string, seg int",
+    )
+    cfg = PipelineConfig(aligned=True, align_mode="greedy",
+                         align_width_norm=norm, agg_threshold=0.0)
+    return [r["agg_sim"] for r in aggregate_aligned(sub, seg, cfg).collect()]
+
+
+def test_greedy_align_reference_semantics(spark):
+    # cells where naive max-per-left would double-use right item r1
+    cells = [(1, 1, 0.9), (2, 1, 0.8), (2, 2, 0.5), (3, 3, 0.4)]
     t = 0.9 + 0.5 + 0.4
-    assert agg["total"] == pytest.approx(t)
-    assert agg["agg_jacc"] == pytest.approx(t / (3 + 3 - t))
-    assert agg["agg_max"] == pytest.approx(t / 3)
+    assert alignment._greedy_total_one(
+        [{"l": l, "r": r, "s": s} for l, r, s in cells]) == pytest.approx(t)
+    # the jacc and max ('wide') normalizations of the same greedy total
+    assert _aligned_totals(spark, cells, 3, 4, "jacc") == [
+        pytest.approx(t / (3 + 4 - t))]
+    assert _aligned_totals(spark, cells, 3, 4, "wide") == [pytest.approx(t / 4)]
 
 
 def test_greedy_align_tie_break_deterministic(spark):
-    rows = [("p", "l1", "r1", 0.5), ("p", "l1", "r2", 0.5), ("p", "l2", "r1", 0.5)]
-    df = spark.createDataFrame(rows, ["pair_id", "left_item", "right_item", "score"])
-    got = sorted((r["left_item"], r["right_item"])
-                 for r in alignment.greedy_align(df).collect())
-    # sorted by (-score, left, right): l1-r1 first, then l2-... r1 used → none for l1-r2? l1 used.
-    assert got == [("l1", "r1")] or got == [("l1", "r1"), ("l2", "r2")]
-    # exact check: l1-r1 picked, l1-r2 blocked (l1 used), l2-r1 blocked (r1 used)
-    assert ("l1", "r1") in got and ("l2", "r1") not in got
+    # equal scores scan in (-score, l, r) order: l1-r1 is picked, which
+    # blocks l1-r2 (l1 used) and l2-r1 (r1 used). Scanning l2-r1 first
+    # would instead admit l1-r2 as well, for a total of 1.0.
+    cells = [(1, 1, 0.5), (1, 2, 0.5), (2, 1, 0.5)]
+    df = spark.createDataFrame(
+        [([{"l": l, "r": r, "s": s} for l, r, s in cells],), (None,)],
+        "cells array<struct<l:int,r:int,s:double>>",
+    )
+    got = [r[0] for r in df.select(alignment.greedy_total_udf("cells")).collect()]
+    assert got == [pytest.approx(0.5), 0.0]
 
 
 # --- multimodal --------------------------------------------------------------

@@ -99,11 +99,11 @@ def test_knn_ivf_plan_is_equi_join(spark):
 
 
 def test_louvain_plan_shape(spark):
-    """The Louvain tier's Python surface must be exactly ONE cogroup
-    FlatMapCoGroupsInPandas (the per-component kernel) — members and sims
-    each shuffle once as rows, no collect_list packing, no row-at-a-time
-    Python — and both cogroup sides must hang off explicit repartitions on
-    the component key (the AQE-coalescing defense shared with refine)."""
+    """The Louvain tier's Python surface must be exactly ONE Arrow UDF (the
+    per-component kernel over bundle rows, shared with refine) — no
+    per-group cogroup/applyInPandas, no row-at-a-time Python — and the
+    member bundles must hang off an explicit repartition on the component
+    key (the AQE-coalescing defense shared with refine)."""
     import re
 
     from takco_spark.operators.louvain import louvain_clusters
@@ -114,13 +114,14 @@ def test_louvain_plan_shape(spark):
     )
     out = louvain_clusters(sims).labels
     plan = _plan(out)
-    assert len(re.findall(r"\(\d+\) FlatMapCoGroupsInPandas", plan)) == 1
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1
     assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan  # m2 is a pre-computed scalar
-    # both cogroup sides repartitioned by the component key (explicit
-    # repartition exchanges are exempt from AQE byte-based coalescing)
-    assert len(re.findall(r"hashpartitioning\(component_id", plan)) >= 1
-    assert len(re.findall(r"hashpartitioning\(_cid", plan)) >= 1
+    assert "FlatMapCoGroupsInPandas" not in plan
+    assert "FlatMapGroupsInPandas" not in plan
+    # explicit repartition exchanges are exempt from AQE byte-based
+    # coalescing
+    assert re.search(
+        r"hashpartitioning\(cluster_id#\d+, \d+\), REPARTITION_BY_NUM", plan)
 
 
 def test_media_path_is_pure_jvm(spark):
