@@ -1,4 +1,4 @@
-"""Blocking: documents → (block_key, doc_id) → candidate pairs.
+"""Blocking: documents → (ns, block_key, doc_id) → capped blocks → pairs.
 
 Reference semantics being reproduced:
 - token / inverted-index blocking: tables sharing any tokenized cell become
@@ -9,26 +9,37 @@ Reference semantics being reproduced:
   /root/reference/takco/cluster/matchers/lsh.py:107-144,215-226).
 
 Spark-first shape: a blocker is DATA, not an index object — it emits
-``(block_key: string, doc_id: string)`` rows; candidate pairs are a
-self-equi-join on ``block_key``. Skew is handled explicitly (north rule):
+``(block_key, doc_id)`` rows; candidate pairs come from grouping on
+``block_key``. Every blocking decision lives here, one function per step,
+and both the batch pipeline and the incremental stream
+(streaming/incremental_er.link_batch) go through the same two:
 
-1. **hot-key drop**: keys with > ``max_block_size`` docs are dropped outright
-   (stop-word tokens — quadratic pair blowup for near-zero precision);
-2. **salting**: keys above ``salt_threshold`` are split into
-   ceil(size/salt_threshold) salt buckets by hash(doc_id); pairs form only
-   within a bucket.
+1. :func:`block_key_streams` — the only dispatch on ``cfg.blockers``: each
+   blocker's key stream, tagged with its namespace id, in one union
+   ``(ns, block_key, doc_id)``; optionally with the corpus-wide hot tokens
+   excluded from the MinHash input (as xxhash64 token hashes);
+2. :func:`apply_block_caps` — skew caps on that union (north rule):
 
-Neither cap is silent: :func:`block_documents` returns a stats dict with
-dropped/salted key counts, persisted into the stage's lineage metrics — the
-analog of the reference's logged blocking reduction factor
+   - **hot-key drop**: keys with > ``max_block_size`` docs are dropped
+     outright (stop-word tokens — quadratic pair blowup for near-zero
+     precision);
+   - **salting**: keys above ``salt_threshold`` are split into
+     ceil(size/salt_threshold) salt buckets by hash(doc_id); pairs form only
+     within a bucket.
+
+Neither cap is silent: :func:`apply_block_caps` returns per-blocker stats
+with dropped/salted key counts, persisted into the stage's lineage metrics —
+the analog of the reference's logged blocking reduction factor
 (/root/reference/takco/cluster/cluster.py:385-390).
+:func:`block_documents` is the batch pipeline's composition of the two.
 """
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from takco_spark.config import PipelineConfig
@@ -105,8 +116,8 @@ def _salt_excluded_expr(salt_threshold: int, max_block_size: int):
     ).cast("long")
 
 
-#: namespace ids carried alongside hashed keys (stats attribution; the
-#: string-keyed API encodes the namespace in the key prefix instead)
+#: namespace ids tagging each key with its blocker (stats attribution;
+#: the string keys also carry the namespace in their prefix)
 NS_TOKEN, NS_MINHASH, NS_EMBEDDING, NS_MEDIA = 0, 1, 2, 3
 _NS_NAMES = {NS_TOKEN: "token", NS_MINHASH: "minhash",
              NS_EMBEDDING: "embedding", NS_MEDIA: "media"}
@@ -122,8 +133,8 @@ def token_blocks(features: DataFrame, cfg: PipelineConfig,
     only needs IDENTITY, not content; hashing shrinks the 37M-row key stream
     from ~12-20-byte strings to 8-byte longs and makes every downstream
     groupBy/join hash fixed-width). xxhash64(token) is exactly the hash the
-    MinHash signature path uses for its token stream, so hot-KEY hashes from
-    this stream double as the signature exclusion list with no re-derivation.
+    MinHash signature path uses for its token stream, so the hashed stream
+    is also where the hot-token exclusion list comes from.
     64-bit collisions merge two blocks spuriously (P ≈ n²/2⁶⁵ ≈ 10⁻⁵ at 37M
     keys) — harmless: a merged block only ADDS candidate pairs, which scoring
     filters."""
@@ -154,7 +165,6 @@ def media_blocks(media_features: DataFrame, hashed: bool = False) -> DataFrame:
 
 
 def minhash_blocks(features: DataFrame, cfg: PipelineConfig,
-                   exclude_tokens: list[str] | None = None,
                    exclude_hashes: list[int] | None = None,
                    hashed: bool = False) -> DataFrame:
     """(doc_id, tokens) → one block key per LSH band: 'lsh{band}:{bandhash}'.
@@ -162,29 +172,21 @@ def minhash_blocks(features: DataFrame, cfg: PipelineConfig,
     Token hashing (xxhash64) runs JVM-side; the signature+banding runs in one
     Arrow-batched pandas UDF (functions.similarity).
 
-    ``exclude_tokens``: stop-tokens removed from the MinHash input. Without
-    this, two unrelated documents sharing only ubiquitous tokens have a small
-    but nonzero per-band collision probability — and n²·ε spurious candidates
+    ``exclude_hashes``: stop-tokens removed from the MinHash input, as
+    xxhash64(token) values (compared after token hashing). Without this, two
+    unrelated documents sharing only ubiquitous tokens have a small but
+    nonzero per-band collision probability — and n²·ε spurious candidates
     grow QUADRATICALLY with corpus size (measured: 288k pairs at 120k docs →
     1.0M at 240k). Dropping tokens that are globally hot (same threshold as
     the block-size cap) zeroes the random-collision Jaccard while leaving
     true-duplicate similarity intact.
-
-    ``exclude_hashes``: the same stop-token exclusion applied AFTER token
-    hashing (values compared against xxhash64(token)) — what the pipeline
-    passes when its hot-key list is already hashed (token_blocks hashed=True).
 
     ``hashed=True`` emits ``block_key = xxhash64(band, band_hash)`` (long)
     instead of the string key (see token_blocks on why identity-only keys
     should be fixed-width).
     """
     lsh_udf = make_lsh_band_udf(cfg.num_perm, cfg.lsh_bands, cfg.minhash_seed)
-    toks = F.col("tokens")
-    if exclude_tokens:
-        toks = F.array_except(
-            toks, F.array(*[F.lit(t) for t in exclude_tokens])
-        )
-    token_hashes = F.transform(toks, lambda t: F.xxhash64(t))
+    token_hashes = F.transform("tokens", lambda t: F.xxhash64(t))
     if exclude_hashes:
         token_hashes = F.array_except(
             token_hashes,
@@ -202,185 +204,81 @@ def minhash_blocks(features: DataFrame, cfg: PipelineConfig,
     return banded.select(key.alias("block_key"), "doc_id")
 
 
-def _apply_cap_map(blocks: DataFrame, sizes: DataFrame,
-                   cfg: PipelineConfig) -> DataFrame:
-    """Apply drop + salt caps with ONE broadcast map and ONE join.
+def _hot_token_hashes(token_hashes: DataFrame, cfg: PipelineConfig,
+                      cap: int = 100_000) -> list[int]:
+    """xxhash64 values of the tokens whose document frequency exceeds the
+    block-size cap — the MinHash stop-token list (see minhash_blocks).
 
-    Hot keys (heavy hitters above ``salt_threshold``) are few by
-    construction, so both caps fit a single broadcast table keyed on
-    block_key with ``nsalt = -1`` marking drop and ``nsalt >= 2`` marking a
-    salted key — the r5 shape built two broadcasts (dropped anti-join +
-    salt-map left join), which is two broadcast-build jobs and two probe
-    passes over the big block stream per pipeline (guide §2.4)."""
-    cap_map = sizes.where(
-        (F.col("n") > cfg.salt_threshold) | (F.col("n") > cfg.max_block_size)
-    ).select(
-        "block_key",
-        F.when(F.col("n") > cfg.max_block_size, F.lit(-1))
-        .otherwise(F.ceil(F.col("n") / cfg.salt_threshold))
-        .cast("int").alias("nsalt"),
-    )
-    return (
-        blocks.join(F.broadcast(cap_map), "block_key", "left")
-        .where(F.coalesce(F.col("nsalt"), F.lit(0)) >= 0)
-        .select(
-            "block_key",
-            F.when(
-                F.col("nsalt").isNotNull(),
-                F.pmod(F.xxhash64("doc_id"), F.col("nsalt")).cast("int"),
-            ).otherwise(F.lit(0)).alias("salt"),
-            "doc_id",
-        )
-    )
-
-
-def apply_block_caps(
-    blocks: DataFrame, cfg: PipelineConfig, blocker: str = "all"
-) -> tuple[DataFrame, BlockingStats]:
-    """Drop oversized keys, salt hot keys; returns (salted blocks, stats).
-
-    Output schema: (block_key, salt, doc_id); downstream pair join keys on
-    (block_key, salt).
-
-    Cost discipline (matters at scale): the raw block stream is persisted and
-    scanned exactly TWICE (once to size keys, once to apply the caps); all
-    drop/salt statistics come from ONE aggregate over the (small) key-size
-    table — never from repeated count() jobs over the big stream — and that
-    aggregate is DEFERRED (r6): callers that never read the stats (the
-    streaming per-batch path discards them) pay no driver barrier at all,
-    and callers that do read them after the capped stream was consumed hit
-    the already-warm sizes cache.
-    """
-    blocks = blocks.persist()
-    sizes = blocks.groupBy("block_key").agg(F.count("*").alias("n")).persist()
-
-    def _compute() -> BlockingStats:
-        srow = sizes.agg(
-            F.count("*").alias("total"),
-            F.sum((F.col("n") > cfg.max_block_size).cast("long")).alias("dropped"),
-            F.sum(
-                (
-                    (F.col("n") > cfg.salt_threshold)
-                    & (F.col("n") <= cfg.max_block_size)
-                ).cast("long")
-            ).alias("salted"),
-            _salt_excluded_expr(cfg.salt_threshold, cfg.max_block_size).alias(
-                "salt_excl"),
-        ).collect()[0]
-        return BlockingStats(
-            blocker=blocker,
-            total_keys=int(srow["total"] or 0),
-            dropped_keys=int(srow["dropped"] or 0),
-            salted_keys=int(srow["salted"] or 0),
-            candidate_rows=-1,
-            salted_pairs_excluded_est=int(srow["salt_excl"] or 0),
-        )
-
-    out = _apply_cap_map(blocks, sizes, cfg)
-    return out, DeferredStats(_compute)
-
-
-def global_hot_tokens(features: DataFrame, cfg: PipelineConfig,
-                      cap: int = 100_000) -> list[str]:
-    """Tokens whose document frequency exceeds the block-size cap — the
-    stop-token set excluded from the MinHash input (see minhash_blocks).
-
-    The list is driver-collected but inherently bounded by Zipf reality;
-    ``cap`` guards pathological inputs (truncation is logged, keeping the
-    most frequent ones, not silent)."""
-    df_counts = (
-        features.select(F.explode("tokens").alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") > cfg.max_block_size)
-    )
-    return _collect_hot(df_counts, cap)
-
-
-def _collect_hot(df_counts: DataFrame, cap: int = 100_000) -> list[str]:
-    """Collect a (token, df) table of hot tokens, keeping the HOTTEST ``cap``
-    when it overflows — ordered truncation plus a logged warning, never an
-    arbitrary silent subset. Hot tokens are few by construction (df > the
-    block cap bounds their count at total_tokens/cap), so the sort input is
-    small; it only pays off in the pathological-overflow case it guards."""
+    ``token_hashes`` is the hashed token key stream (token_blocks with
+    hashed=True). The list is collected into the MinHash plan as literals,
+    but Zipf reality bounds it (df > the block cap bounds its length at
+    total_tokens/cap); ``cap`` guards pathological inputs by keeping the
+    HOTTEST ``cap`` with a logged warning — ordered truncation, never an
+    arbitrary silent subset."""
     rows = (
-        df_counts.orderBy(F.col("df").desc(), "token").limit(cap + 1).collect()
+        token_hashes.groupBy("block_key").agg(F.count("*").alias("df"))
+        .where(F.col("df") > cfg.max_block_size)
+        .orderBy(F.col("df").desc(), "block_key")
+        .limit(cap + 1).collect()
     )
-    toks = [r["token"] for r in rows]
-    if len(toks) > cap:
-        import logging
-
+    hot = [r["block_key"] for r in rows]
+    if len(hot) > cap:
         logging.getLogger(__name__).warning(
             "hot-token list truncated at %d hottest (raise max_block_size "
             "for this corpus scale)", cap,
         )
-        toks = toks[:cap]
-    return toks
+        hot = hot[:cap]
+    return hot
 
 
-def block_documents(
+def block_key_streams(
     features: DataFrame, cfg: PipelineConfig,
     embeddings: DataFrame | None = None,
     media: DataFrame | None = None,
-) -> tuple[DataFrame, list[BlockingStats]]:
-    """Run the configured blockers and cap the UNION of their key streams.
-
-    Returns (blocks(block_key, salt, doc_id), per-blocker stats).
-
-    The blockers' key namespaces are disjoint ('tok:…' vs 'lsh<band>:…' vs
-    'emb:…'), so one cap pass over the union is semantically identical to
-    per-blocker passes but pays the sizes-groupBy / stats-collect / cap-join
-    ONCE — fixed-cost discipline that matters both for tiny-corpus latency
-    and for job-count at cluster scale. Per-blocker stats come from a single
-    grouped aggregate over the (small) key-size table.
+    *, drop_hot_tokens: bool,
+) -> DataFrame:
+    """The union of the ``cfg.blockers`` key streams, each row tagged with
+    its blocker's namespace id: ``(ns tinyint, block_key, doc_id)``.
+    ``block_key`` is a string ('tok:…', 'lsh<band>:…', 'emb:…', 'med:…') or,
+    under ``cfg.hashed_keys``, its xxhash64 long.
 
     ``embeddings``: (doc_id, emb) table required by the 'embedding' blocker
     (random-hyperplane buckets — the FAISS-blocking analog, SURVEY.md J3).
-
     ``media``: (doc_id, media_refs) table required by the 'media' blocker
     (spans.doc_media_features — exact-key blocking on shared media objects).
+
+    ``drop_hot_tokens``: exclude the tokens whose document frequency in
+    ``features`` exceeds ``max_block_size`` from the MinHash input. The
+    batch pipeline passes True. The incremental stream passes False — a
+    stream has no finished corpus to derive the list from, so its MinHash
+    signs all tokens (increment ≡ batch exactly when no token exceeds
+    max_block_size; the caps still bound every key either way).
+
+    Every blocker is a deterministic per-doc key function (same doc → same
+    keys in any batch), which is what lets the stream persist these rows as
+    its block index. The dispatch runs while the plan is built, so an empty
+    or unknown blocker, or one whose input table is missing, raises
+    ``ValueError`` before any Spark job.
     """
+    if not cfg.blockers:
+        raise ValueError("cfg.blockers is empty")
     hashed = cfg.hashed_keys
-    # the token key stream is shared: it feeds the union AND (persisted) the
-    # hot-token derivation for the minhash exclude list — one explode, one
-    # sizes groupBy, instead of a separate global_hot_tokens scan
-    tb: DataFrame | None = None
-    if "minhash" in cfg.blockers and "token" in cfg.blockers:
-        tb = token_blocks(features, cfg, hashed=hashed).persist()
+    token_hashes = token_blocks(features, cfg, hashed=True)
+    if hashed and drop_hot_tokens and {"token", "minhash"} <= set(cfg.blockers):
+        # the hashed token key stream feeds the union AND the hot-token
+        # count — one explode, cached once
+        token_hashes = token_hashes.persist()
 
     parts: list[DataFrame] = []
     for blocker in cfg.blockers:
         if blocker == "token":
-            part = tb if tb is not None else token_blocks(features, cfg,
-                                                          hashed=hashed)
+            part = token_hashes if hashed else token_blocks(features, cfg)
             ns = NS_TOKEN
         elif blocker == "minhash":
-            if tb is not None:
-                hot_df = (
-                    tb.groupBy("block_key").agg(F.count("*").alias("df"))
-                    .where(F.col("df") > cfg.max_block_size)
-                )
-                if hashed:
-                    # hashed token keys ARE xxhash64(token) — the exact hash
-                    # the signature path applies, so the hot-key list is the
-                    # exclusion list with no token recovery needed
-                    hot = _collect_hot(
-                        hot_df.select(F.col("block_key").alias("token"), "df")
-                    )
-                    part = minhash_blocks(features, cfg, exclude_hashes=hot,
-                                          hashed=True)
-                else:
-                    hot = _collect_hot(
-                        hot_df.select(
-                            F.expr("substring(block_key, 5)").alias("token"),
-                            "df",
-                        )
-                    )
-                    part = minhash_blocks(features, cfg, exclude_tokens=hot)
-            else:
-                hot = global_hot_tokens(features, cfg)
-                part = minhash_blocks(features, cfg, exclude_tokens=hot,
-                                      hashed=hashed)
+            hot = (_hot_token_hashes(token_hashes, cfg) if drop_hot_tokens
+                   else None)
+            part = minhash_blocks(features, cfg, exclude_hashes=hot,
+                                  hashed=hashed)
             ns = NS_MINHASH
         elif blocker == "embedding":
             if embeddings is None:
@@ -409,14 +307,38 @@ def block_documents(
     raw = parts[0]
     for p in parts[1:]:
         raw = raw.unionByName(p)
+    return raw
 
+
+def apply_block_caps(
+    raw: DataFrame, cfg: PipelineConfig
+) -> tuple[DataFrame, DeferredStats]:
+    """Drop oversized keys, salt hot keys of a ``(ns, block_key, doc_id)``
+    key stream; returns (blocks(block_key, salt, doc_id), per-blocker
+    stats). Downstream pairing keys on (block_key, salt).
+
+    The blockers' key namespaces are disjoint (string mode: prefixes;
+    hashed mode: the ~10⁻⁵ cross-namespace collision odds documented on
+    token_blocks), so one cap pass over the union is semantically identical
+    to per-blocker passes but pays the sizes groupBy and the cap join ONCE,
+    and max(ns) attributes each key to its blocker for the stats rollup.
+
+    Cost discipline: the raw stream is persisted and scanned exactly TWICE
+    (once to size keys, once to apply the caps). Hot keys (above
+    ``salt_threshold``) are few by construction, so both caps fit ONE
+    broadcast map keyed on block_key, ``nsalt = -1`` marking drop and
+    ``nsalt >= 2`` a salted key — one broadcast build and one probe pass.
+    All drop/salt statistics come from ONE grouped aggregate over the small
+    key-size table, DEFERRED (r6): collected mid-pipeline it was a blocking
+    collect that forced ``raw`` to materialize in its own job; deferred, the union, the cap broadcast and the pair generation run as
+    one job, callers that never read the stats (the stream) pay nothing,
+    and a later read replays from the warm sizes cache.
+    """
     raw = raw.persist()
-    # key namespaces are disjoint (string mode: prefixes; hashed mode: the
-    # ~10⁻⁵ cross-namespace collision odds documented on token_blocks), so
-    # max(ns) attributes each key to its blocker for the stats rollup
     sizes = raw.groupBy("block_key").agg(
         F.count("*").alias("n"), F.max("ns").alias("ns")
     ).persist()
+
     def _compute_stats() -> list[BlockingStats]:
         srows = (
             sizes.groupBy("ns")
@@ -448,21 +370,58 @@ def block_documents(
             for r in srows
         ]
 
-    # DEFERRED (r6): the per-blocker rollup collect was a mid-pipeline
-    # driver barrier that forced `raw` to materialize in its own job before
-    # the caps/pairs job could start; deferred, the whole blocking union,
-    # the cap broadcast and the pair generation run as ONE job, and the
-    # rollup (when a caller reads it) replays from the warm sizes cache.
-    stats = DeferredStats(_compute_stats)
-
-    out = _apply_cap_map(raw, sizes, cfg)
+    cap_map = sizes.where(
+        (F.col("n") > cfg.salt_threshold) | (F.col("n") > cfg.max_block_size)
+    ).select(
+        "block_key",
+        F.when(F.col("n") > cfg.max_block_size, F.lit(-1))
+        .otherwise(F.ceil(F.col("n") / cfg.salt_threshold))
+        .cast("int").alias("nsalt"),
+    )
     # NOT persisted: the pipeline consumes blocks ONCE (candidate_pairs is a
-    # single groupBy scan, not a self-join), and `raw` above is already
-    # cached — the cap map on top is one broadcast join. A second 37M-row
-    # materialization here measured as pure overhead at bench scale; callers
-    # that scan blocks repeatedly (tests, stats) recompute only the cheap
-    # cap join from the cached union.
-    return out, stats
+    # single groupBy scan), and `raw` is already cached — callers that scan
+    # blocks repeatedly (tests, stats) recompute only the cheap cap join.
+    out = (
+        raw.join(F.broadcast(cap_map), "block_key", "left")
+        .where(F.coalesce(F.col("nsalt"), F.lit(0)) >= 0)
+        .select(
+            "block_key",
+            F.when(
+                F.col("nsalt").isNotNull(),
+                F.pmod(F.xxhash64("doc_id"), F.col("nsalt")).cast("int"),
+            ).otherwise(F.lit(0)).alias("salt"),
+            "doc_id",
+        )
+    )
+    return out, DeferredStats(_compute_stats)
+
+
+def block_documents(
+    features: DataFrame, cfg: PipelineConfig,
+    embeddings: DataFrame | None = None,
+    media: DataFrame | None = None,
+) -> tuple[DataFrame, list[BlockingStats]]:
+    """The batch pipeline's blocking: the configured key streams with the
+    corpus-wide hot tokens dropped from MinHash, capped as one union.
+
+    Returns (blocks(block_key, salt, doc_id), per-blocker stats); see
+    :func:`block_key_streams` for the ``embeddings``/``media`` tables."""
+    return apply_block_caps(
+        block_key_streams(features, cfg, embeddings, media,
+                          drop_hot_tokens=True),
+        cfg,
+    )
+
+
+def bucket_pairs() -> Column:
+    """Every unordered pair of a bucket's ascending-sorted ``ids`` array, as
+    ``struct(doc_id_1, doc_id_2)`` with doc_id_1 < doc_id_2: (x, every later
+    y) enumerates each pair exactly once, inside the row — no join."""
+    return F.expr("""
+      flatten(transform(ids, (x, i) ->
+        transform(slice(ids, i + 2, size(ids) - i - 1),
+                  y -> struct(x as doc_id_1, y as doc_id_2))))
+    """)
 
 
 def candidate_pairs(blocks: DataFrame) -> DataFrame:
@@ -489,14 +448,7 @@ def candidate_pairs(blocks: DataFrame) -> DataFrame:
         .agg(F.sort_array(F.collect_set("doc_id")).alias("ids"))
         .where(F.size("ids") >= 2)
     )
-    # ids sorted ascending → (x, every later y) enumerates each unordered
-    # pair exactly once with doc_id_1 < doc_id_2 by construction
-    pair_structs = F.expr("""
-      flatten(transform(ids, (x, i) ->
-        transform(slice(ids, i + 2, size(ids) - i - 1),
-                  y -> struct(x as doc_id_1, y as doc_id_2))))
-    """)
-    exploded = buckets.select("block_key", F.explode(pair_structs).alias("p"))
+    exploded = buckets.select("block_key", F.explode(bucket_pairs()).alias("p"))
     return exploded.groupBy(
         F.col("p.doc_id_1").alias("doc_id_1"),
         F.col("p.doc_id_2").alias("doc_id_2"),

@@ -23,6 +23,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
 from takco_spark.functions.similarity import make_lsh_band_udf
+from takco_spark.operators.blocking import bucket_pairs
 
 
 def normalize_text(col):
@@ -157,13 +158,8 @@ def _bounded_bucket_pairs(banded: DataFrame, max_bucket_size: int | None) -> Dat
     )
     if max_bucket_size is not None:
         buckets = buckets.where(F.size("ids") <= max_bucket_size)
-    pair_structs = F.expr("""
-      flatten(transform(ids, (x, i) ->
-        transform(slice(ids, i + 2, size(ids) - i - 1),
-                  y -> struct(x as doc_id_1, y as doc_id_2))))
-    """)
     return (
-        buckets.select(F.explode(pair_structs).alias("p"))
+        buckets.select(F.explode(bucket_pairs()).alias("p"))
         .select(F.col("p.doc_id_1").alias("doc_id_1"),
                 F.col("p.doc_id_2").alias("doc_id_2"))
         .distinct()

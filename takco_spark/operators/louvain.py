@@ -32,8 +32,8 @@ byte-identical to a whole-graph sequential run
 Scale guard: a component with more than ``max_component_size`` members (giant
 component — the known failure mode of a too-loose edge threshold) would pack
 O(E_component) edges into one Python group; such components PASS THROUGH with
-their CC label, and the skip is observable via
-:func:`takco_spark.operators.refine.oversized_refine_stats` — never silent.
+their CC label. Guard skips are not yet counted by any pipeline run
+(ROADMAP Direction 5).
 At the reference's operating point components are bounded by the same
 agg_threshold that bounds them for refinement (wikitables max_cluster_size
 250), so the guard exists for skew defense, not as the normal path.

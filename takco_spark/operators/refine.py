@@ -84,8 +84,8 @@ def refine_clusters(
     Size guard: a coarse cluster with more than ``max_group_size`` members
     (a giant component — the known CC failure mode on a too-loose threshold)
     would pack O(k²) sims into one bundle row and run an O(k³) linkage; such
-    clusters PASS THROUGH unrefined (refined_id = '{cluster_id}/0'). The skip
-    is observable via :func:`oversized_refine_stats` — never silent.
+    clusters PASS THROUGH unrefined (refined_id = '{cluster_id}/0'). Guard
+    skips are not yet counted by any pipeline run (ROADMAP Direction 5).
     ``max_group_size=None`` disables the guard entirely — for callers that
     ALREADY bound every cluster (the pipeline runs refine after the G2
     rechunk, whose slices can never exceed ``cfg.max_cluster_size``, so the
@@ -115,18 +115,3 @@ def refine_clusters(
         return grouped
     return grouped.unionByName(passthrough)
 
-
-def oversized_refine_stats(labels: DataFrame, max_group_size: int) -> dict:
-    """Count clusters/rows skipped by refine_clusters' size guard."""
-    row = (
-        labels.groupBy("cluster_id").agg(F.count("*").alias("n"))
-        .agg(
-            F.count("*").alias("clusters"),
-            F.sum((F.col("n") > max_group_size).cast("long")).alias("skipped_clusters"),
-            F.sum(F.when(F.col("n") > max_group_size, F.col("n")).otherwise(0)).alias(
-                "skipped_rows"
-            ),
-        )
-        .collect()[0]
-    )
-    return {k: int(row[k] or 0) for k in ("clusters", "skipped_clusters", "skipped_rows")}

@@ -329,7 +329,7 @@ def aggregate_aligned(sub: DataFrame, seg_features: DataFrame,
     if cfg.align_mode != "greedy":
         raise ValueError(f"unknown align_mode {cfg.align_mode!r}")
 
-    cap = getattr(cfg, "align_max_cells", 0) or 0
+    cap = cfg.align_max_cells
     if cap > 0:
         # Skew guard: bound the per-pair cell list at top-K by score before
         # the collect. Greedy consumes cells in descending-score order, so

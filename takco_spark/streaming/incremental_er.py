@@ -28,9 +28,11 @@ prior state is never destroyed, and re-running a batch is idempotent (the
 parquet-level stand-in for Iceberg snapshot isolation):
 
     features/batch=<id>/   (doc_id, name, tokens[, media_refs])  delta/batch
-    blocks/batch=<id>/     (block_key, doc_id)        delta per batch
-                           (union of the cfg.blockers key streams —
-                           token/minhash/media, all deterministic per doc)
+    blocks/batch=<id>/     (ns, block_key, doc_id)    delta per batch
+                           (operators.blocking.block_key_streams: the
+                           union of the cfg.blockers key streams —
+                           token/minhash/media, all deterministic per doc —
+                           with each key's blocker namespace id)
     labels/batch=<id>/     (doc_id, cluster_id)       DELTA per batch: new
                            docs + docs whose cluster changed (r6 — the r5
                            layout wrote a FULL O(corpus) snapshot per
@@ -64,51 +66,12 @@ from pyspark.sql import functions as F
 from takco_spark.config import PipelineConfig
 from takco_spark.operators.blocking import (
     apply_block_caps,
+    block_key_streams,
     candidate_pairs,
-    media_blocks,
-    minhash_blocks,
-    token_blocks,
 )
 from takco_spark.operators.components import connected_components
 from takco_spark.operators.scoring import score_pairs
 from takco_spark.spans import DOCUMENT_SCHEMA, doc_media_features, doc_text_features
-
-
-def _batch_blocks(new_feats: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """The batch's block-key delta: union of cfg.blockers key streams.
-
-    Every supported blocker is a DETERMINISTIC per-doc key function (same
-    doc → same keys in any batch), which is exactly what makes the persisted
-    block index valid across batches. Deviation from the batch pipeline,
-    documented: batch-mode MinHash excludes corpus-global hot tokens from
-    signatures (block_documents derives the list from the full token
-    stream); a stream has no finished corpus to derive it from, so
-    incremental MinHash signs ALL tokens — increment ≡ batch exactly when no
-    token exceeds max_block_size, and the union-level caps still bound every
-    key either way. 'embedding' needs a per-batch embeddings table and its
-    own feature state — run the batch pipeline for it.
-    """
-    unsupported = set(cfg.blockers) - {"token", "minhash", "media"}
-    if unsupported:
-        raise ValueError(
-            f"incremental linkage supports blockers token/minhash/media; got "
-            f"{sorted(unsupported)} — use plans.pipeline.run_pipeline for these")
-    parts = []
-    if "token" in cfg.blockers:
-        parts.append(token_blocks(new_feats, cfg, hashed=cfg.hashed_keys))
-    if "minhash" in cfg.blockers:
-        parts.append(minhash_blocks(new_feats, cfg, hashed=cfg.hashed_keys))
-    if "media" in cfg.blockers:
-        # media_refs ride the feature delta (media_on in link_batch), so the
-        # key stream reads the already-parsed refs, not the spans again
-        parts.append(media_blocks(new_feats.select("doc_id", "media_refs"),
-                                  hashed=cfg.hashed_keys))
-    if not parts:
-        raise ValueError("cfg.blockers is empty")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def _read_deltas(spark: SparkSession, root: str, schema: str,
@@ -303,10 +266,9 @@ def link_batch(
     # checkpoint manager's config token in the batch pipeline
     feat_schema = ("doc_id string, name string, tokens array<string>"
                    + (", media_refs array<string>" if media_on else ""))
-    block_schema = (
-        "block_key bigint, doc_id string" if cfg.hashed_keys
-        else "block_key string, doc_id string"
-    )
+    block_schema = ("ns tinyint, block_key "
+                    + ("bigint" if cfg.hashed_keys else "string")
+                    + ", doc_id string")
 
     # -- write this batch's feature/block deltas FIRST (idempotent per-batch
     # dirs), then operate on the parquet-backed reads: clean scan plans (no
@@ -320,10 +282,20 @@ def link_batch(
         feats_delta = feats_delta.join(
             doc_media_features(batch.select("doc_id", "spans")), "doc_id"
         )
+    # the blocker dispatch runs at plan time: planning the key streams over
+    # the unwritten delta raises on a bad cfg.blockers (empty, unknown, or
+    # 'embedding', whose table the stream does not keep) before anything
+    # lands in state_dir
+    block_key_streams(feats_delta, cfg, media=feats_delta,
+                      drop_hot_tokens=False)
     feats_delta.write.mode("overwrite").parquet(
         f"{state_dir}/features/batch={batch_id}")
     new_feats = spark.read.parquet(f"{state_dir}/features/batch={batch_id}")
-    _batch_blocks(new_feats, cfg).write.mode(
+    # the block-key delta; media_refs ride the feature delta (media_on), so
+    # the media key stream reads the already-parsed refs. No hot-token
+    # exclusion: see block_key_streams on why the stream signs all tokens.
+    block_key_streams(new_feats, cfg, media=new_feats,
+                      drop_hot_tokens=False).write.mode(
         "overwrite"
     ).parquet(f"{state_dir}/blocks/batch={batch_id}")
     new_blocks = spark.read.parquet(f"{state_dir}/blocks/batch={batch_id}")
@@ -342,9 +314,7 @@ def link_batch(
     hits = old_blocks.join(
         F.broadcast(new_blocks.select("block_key").distinct()), "block_key"
     )
-    capped, _stats = apply_block_caps(
-        new_blocks.unionByName(hits), cfg, blocker="incremental"
-    )
+    capped, _stats = apply_block_caps(new_blocks.unionByName(hits), cfg)
     # keep pairs where at least one side is NEW (old-old pairs were linked in
     # prior batches; re-scoring them is pure waste). One pass with two
     # broadcast membership joins — no self-union, no distinct.

@@ -1,12 +1,15 @@
 """Blocking: token/minhash keys, hot-key drop, salting, pair canonicalization."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from takco_spark.config import PipelineConfig
 from takco_spark.datagen import synth_documents
 from takco_spark.operators.blocking import (
+    NS_MINHASH,
     apply_block_caps,
     block_documents,
+    block_key_streams,
     candidate_pairs,
     minhash_blocks,
     token_blocks,
@@ -31,8 +34,11 @@ def test_token_blocks_share_entity_token(spark):
 def test_hot_key_dropped_and_salted(spark):
     cfg = PipelineConfig(blockers=("token",), max_block_size=20, salt_threshold=8)
     feats = _features(spark, n=60)  # stop-words appear in ~most of 60 docs
-    blocks = token_blocks(feats, cfg)
-    capped, stats = apply_block_caps(blocks, cfg, "token")
+    raw = block_key_streams(feats, cfg, drop_hot_tokens=False)
+    assert raw.columns == ["ns", "block_key", "doc_id"]
+    capped, all_stats = apply_block_caps(raw, cfg)
+    [stats] = all_stats
+    assert stats.blocker == "token"
     assert stats.dropped_keys >= 1  # at least one stop-word key dropped
     sizes = capped.groupBy("block_key", "salt").count()
     assert sizes.agg(F.max("count")).collect()[0][0] <= cfg.max_block_size
@@ -60,6 +66,17 @@ def test_minhash_blocks_collide_for_identical_docs(spark):
     assert pairs.count() > 0
 
 
+@pytest.mark.parametrize("blockers,match", [
+    ((), "empty"), (("token", "bogus"), "bogus"),
+    (("embedding",), "embeddings table"),
+], ids=["empty", "unknown", "embedding"])
+def test_block_key_streams_rejects_bad_blockers(spark, blockers, match):
+    """The one blocker dispatch raises at plan time, before any job."""
+    with pytest.raises(ValueError, match=match):
+        block_key_streams(_features(spark, n=4), PipelineConfig(blockers=blockers),
+                          drop_hot_tokens=True)
+
+
 def test_candidate_pairs_canonical_dedup(spark):
     cfg = PipelineConfig(blockers=("token", "minhash"))
     feats = _features(spark)
@@ -75,15 +92,14 @@ def test_salted_pair_loss_estimate_observable(spark):
     """ADVICE r1: pairs excluded by salting must be observable. A key with
     n docs in (salt_threshold, max_block_size] is split into s=ceil(n/th)
     buckets; the stats must carry the estimated within-key pairs lost."""
-    from takco_spark.config import PipelineConfig
-    from takco_spark.operators.blocking import apply_block_caps
-
     cfg = PipelineConfig(salt_threshold=4, max_block_size=100)
     # one shared key over 12 docs → s=3 buckets; lost ≈ n(n-1)/2 − n(n/s−1)/2
-    rows = [("tok:shared", f"d{i:02d}") for i in range(12)]
-    blocks = spark.createDataFrame(rows, "block_key string, doc_id string")
-    capped, stats = apply_block_caps(blocks, cfg)
-    assert stats.salted_keys == 1
+    rows = [(0, "tok:shared", f"d{i:02d}") for i in range(12)]
+    blocks = spark.createDataFrame(
+        rows, "ns tinyint, block_key string, doc_id string")
+    capped, all_stats = apply_block_caps(blocks, cfg)
+    [stats] = all_stats
+    assert stats.blocker == "token" and stats.salted_keys == 1
     n, s = 12.0, 3.0
     expected = int((n * (n - 1) - n * (n / s - 1)) / 2)
     assert stats.salted_pairs_excluded_est == expected
@@ -95,12 +111,16 @@ def test_salted_pair_loss_estimate_observable(spark):
     assert pairs < n * (n - 1) / 2
 
 
-def test_hashed_keys_equivalent_pairs_and_stats(spark):
+@pytest.mark.parametrize("blockers", [("token", "minhash"), ("minhash",)],
+                         ids=["token_minhash", "minhash_only"])
+def test_hashed_keys_equivalent_pairs_and_stats(spark, blockers):
     """cfg.hashed_keys swaps string block keys for xxhash64 longs — the
     candidate-pair SET and the per-blocker stats must be identical (key
-    hashing changes identity representation, never block membership)."""
+    hashing changes identity representation, never block membership). The
+    caps are low enough that tokens exceed them, so the hot-token exclusion
+    from the MinHash input (token hashes in both key modes) is in play."""
     feats = _features(spark, n=80)
-    base = dict(blockers=("token", "minhash"), max_block_size=30, salt_threshold=10)
+    base = dict(blockers=blockers, max_block_size=30, salt_threshold=10)
     b_str, st_str = block_documents(feats, PipelineConfig(hashed_keys=False, **base))
     b_hash, st_hash = block_documents(feats, PipelineConfig(hashed_keys=True, **base))
     assert dict(b_hash.dtypes)["block_key"] == "bigint"
@@ -113,3 +133,11 @@ def test_hashed_keys_equivalent_pairs_and_stats(spark):
     key = lambda sts: {s.blocker: (s.total_keys, s.dropped_keys, s.salted_keys,
                                    s.salted_pairs_excluded_est) for s in sts}
     assert key(st_str) == key(st_hash)
+    assert set(key(st_hash)) == set(blockers)
+    if "token" in blockers:
+        assert key(st_hash)["token"][1] >= 1  # a stop-word key is dropped
+    # hot tokens exist at these caps: excluding them changes the signatures
+    cfg = PipelineConfig(hashed_keys=True, **base)
+    mh = lambda drop: block_key_streams(feats, cfg, drop_hot_tokens=drop).where(
+        F.col("ns") == NS_MINHASH)
+    assert mh(True).exceptAll(mh(False)).count() > 0

@@ -169,6 +169,9 @@ def test_incremental_rejects_unsupported_blocker(spark, tmp_path):
     d = _media_doc(spark, "x", "aaa", ["m1"])
     with pytest.raises(ValueError, match="embedding"):
         link_batch(spark, d, str(tmp_path / "s"), 0, cfg)
+    # rejected before any state write: no feature delta a later batch
+    # could read without its blocks and labels
+    assert not (tmp_path / "s" / "features" / "batch=0").exists()
 
 
 def test_compact_state_preserves_linkage(spark, tmp_path):

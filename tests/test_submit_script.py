@@ -130,6 +130,10 @@ def test_real_spark_submit_py_files(spark, tmp_path):
     stats_line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
     stats = json.loads(stats_line)
     assert stats["stats"]["cc"]["converged"] is True
+    # blocking stats are emitted as a JSON list of per-blocker dicts
+    blocking = stats["stats"]["blocking"]
+    assert isinstance(blocking, list) and blocking
+    assert all(isinstance(s, dict) and "blocker" in s for s in blocking)
 
     labelled = spark.read.parquet(outp)
     assert labelled.count() == 120
