@@ -80,7 +80,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--run-id", default=d.run_id)
     # --- the config surface (defaults = PipelineConfig defaults) ------------
     p.add_argument("--blockers", default=",".join(d.blockers),
-                   help="comma list from {token,minhash,embedding}")
+                   help="comma list from {token,minhash,embedding,media}")
     p.add_argument("--max-block-size", type=int, default=d.max_block_size)
     p.add_argument("--salt-threshold", type=int, default=d.salt_threshold)
     p.add_argument("--agg-expr", default=d.agg_expr)

@@ -276,16 +276,6 @@ def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     return pd.Series(jaro_winkler_np(s1.tolist(), s2.tolist()))
 
 
-# The function is pure, but stays DECLARED non-deterministic so the optimizer
-# may not duplicate it under a pushed-down filter (guide §4.4): the scoring
-# stages filter on UDF-derived columns (`s > 0`, `agg_sim >= threshold`), and
-# with a deterministic UDF Catalyst pushes the predicate below the projection
-# and evaluates the whole matcher suite TWICE (two ArrowEvalPython nodes in
-# the seg-scores stage — measured 23 + 29 core-seconds at sf0.1). Values are
-# identical either way; only the optimizer's licence to clone is revoked.
-jaro_winkler_udf = jaro_winkler_udf.asNondeterministic()
-
-
 def jaro_winkler_py(s1: str, s2: str, prefix_weight: float = 0.1,
                     boost_threshold: float = 0.7, max_len: int = MAX_JW_LEN) -> float:
     """Scalar reference implementation (tests only — never in a Spark plan)."""

@@ -400,33 +400,14 @@ def embedding_neardup_pairs(
     )
 
 
-def embedding_neardup_lsh(
-    embeddings: DataFrame, threshold: float = 0.9, n_bits: int = 8,
-    seed: int = 42, max_bucket_size: int | None = 500,
-    id_col: str = "doc_id", emb_col: str = "emb", dim: int | None = None,
-) -> DataFrame:
-    """Bucketed near-dup mining at scale: random-hyperplane LSH buckets
-    (4 tables × n_bits, similarity_search.make_hyperplane_udf) → bounded
-    within-bucket candidate pairs → EXACT cosine filter at ``threshold``.
-
-    Precision is exact (every emitted pair passes the true cosine test);
-    recall < 1 by LSH design — pairs whose vectors land in no common bucket
-    are missed, and oversized buckets are dropped under the no-silent-caps
-    rule (count observable via dedup.bucket_cap_stats on the bucket stream).
-    Same candidate-generation contract as minhash_dedup_buckets: never
-    all-pairs, bucket sizes bounded, one shuffle to bucket + one to dedup.
-    """
+def _exact_cosine_pairs(pairs: DataFrame, embeddings: DataFrame,
+                        threshold: float, id_col: str,
+                        emb_col: str) -> DataFrame:
+    """Bucketed candidate pairs (doc_id_1, doc_id_2) → (id_1, id_2, cos_sim)
+    with the EXACT cosine >= ``threshold``: the vectors join onto both sides
+    (shuffle-hash on the narrow pair stream), then one cosine projection."""
     from takco_spark.functions.similarity import cosine
-    from takco_spark.operators.similarity_search import make_hyperplane_udf
 
-    # dim=None derives the dimensionality in-plan inside the bucket UDF —
-    # no driver-side .first() action hides in the operator.
-    udf = make_hyperplane_udf(dim, n_bits, seed)
-    banded = embeddings.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(udf(F.col(emb_col))).alias("bucket"),
-    )
-    pairs = _bounded_bucket_pairs(banded, max_bucket_size)
     e1 = embeddings.select(
         F.col(id_col).alias("doc_id_1"),
         F.col(emb_col).cast("array<double>").alias("_e1"),
@@ -445,6 +426,35 @@ def embedding_neardup_lsh(
         )
         .where(F.col("cos_sim") >= F.lit(threshold))
     )
+
+
+def embedding_neardup_lsh(
+    embeddings: DataFrame, threshold: float = 0.9, n_bits: int = 8,
+    seed: int = 42, max_bucket_size: int | None = 500,
+    id_col: str = "doc_id", emb_col: str = "emb", dim: int | None = None,
+) -> DataFrame:
+    """Bucketed near-dup mining at scale: random-hyperplane LSH buckets
+    (4 tables × n_bits, similarity_search.make_hyperplane_udf) → bounded
+    within-bucket candidate pairs → EXACT cosine filter at ``threshold``.
+
+    Precision is exact (every emitted pair passes the true cosine test);
+    recall < 1 by LSH design — pairs whose vectors land in no common bucket
+    are missed, and oversized buckets are dropped under the no-silent-caps
+    rule (count observable via dedup.bucket_cap_stats on the bucket stream).
+    Same candidate-generation contract as minhash_dedup_buckets: never
+    all-pairs, bucket sizes bounded, one shuffle to bucket + one to dedup.
+    """
+    from takco_spark.operators.similarity_search import make_hyperplane_udf
+
+    # dim=None derives the dimensionality in-plan inside the bucket UDF —
+    # no driver-side .first() action hides in the operator.
+    udf = make_hyperplane_udf(dim, n_bits, seed)
+    banded = embeddings.select(
+        F.col(id_col).alias("doc_id"),
+        F.explode(udf(F.col(emb_col))).alias("bucket"),
+    )
+    pairs = _bounded_bucket_pairs(banded, max_bucket_size)
+    return _exact_cosine_pairs(pairs, embeddings, threshold, id_col, emb_col)
 
 
 def embedding_neardup_ivf(
@@ -467,7 +477,6 @@ def embedding_neardup_ivf(
     as the LSH tier: oversized lists are dropped via _bounded_bucket_pairs,
     observable through dedup.bucket_cap_stats on the bucket stream.
     """
-    from takco_spark.functions.similarity import cosine
     from takco_spark.operators.similarity_search import (
         make_ivf_assign_udf, train_ivf_centroids)
 
@@ -480,21 +489,4 @@ def embedding_neardup_ivf(
         F.explode(assign(F.col(emb_col))).alias("bucket"),
     ).dropDuplicates(["doc_id", "bucket"])
     pairs = _bounded_bucket_pairs(banded, max_bucket_size)
-    e1 = embeddings.select(
-        F.col(id_col).alias("doc_id_1"),
-        F.col(emb_col).cast("array<double>").alias("_e1"),
-    )
-    e2 = embeddings.select(
-        F.col(id_col).alias("doc_id_2"),
-        F.col(emb_col).cast("array<double>").alias("_e2"),
-    )
-    return (
-        pairs.join(e1.hint("shuffle_hash"), "doc_id_1")
-        .join(e2.hint("shuffle_hash"), "doc_id_2")
-        .select(
-            F.col("doc_id_1").alias("id_1"),
-            F.col("doc_id_2").alias("id_2"),
-            cosine(F.col("_e1"), F.col("_e2")).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= F.lit(threshold))
-    )
+    return _exact_cosine_pairs(pairs, embeddings, threshold, id_col, emb_col)

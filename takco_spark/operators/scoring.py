@@ -3,16 +3,22 @@
 Reference shape: within each blocked candidate pair, every matcher computes a
 vectorized similarity and the scores land in one frame keyed by the pair
 (make_blocked_matches_df, /root/reference/takco/cluster/cluster.py:186-211);
-matchers are token-set Jaccard (celljacc.py:107-121), MinHash digest-mean
-(lsh.py:228-247), embedding cosine (embedding.py:227-246).
+the column-wise scheme runs the same matchers per column pair
+(cluster.py:346-380). Matchers are token-set Jaccard (celljacc.py:107-121),
+MinHash digest-mean (lsh.py:228-247), embedding cosine (embedding.py:227-246).
 
-Spark shape: two hash joins attach per-doc features to the pair stream, then
-ALL similarity columns are computed in one projection —
+Spark shape: both paths — whole documents (:func:`score_pairs`) and segment
+pairs (:func:`aligned_segment_scores`) — attach per-doc tables to the two
+pair sides with one helper (:func:`_attach_sides`: a shuffle-hash join per
+side, column ``c`` → ``c_1``/``c_2``) and score with one matcher suite
+(:func:`_matchers`), computed in one projection:
 - jaccard:  JVM array_intersect/array_union (celljacc semantics),
 - lev_sim:  JVM built-in levenshtein, normalized (types.py:195-201),
 - jw:       Arrow-batched numpy Jaro-Winkler (functions.similarity),
 - tfidf_cos (optional): sparse sum-product join on shared tokens — the
-  canonical Spark TF-IDF cosine (reference analog: snow_pipeline.py:254-313).
+  canonical Spark TF-IDF cosine (reference analog: snow_pipeline.py:254-313),
+- emb_cos / media_jacc (optional, whole documents only): one left side-join
+  and one expression each.
 
 The aggregate score is a compiled Column from the config's agg expression
 (functions.aggexpr) — same DSL as the reference's numexpr strings.
@@ -22,11 +28,26 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType
 
 from takco_spark.config import PipelineConfig
-from takco_spark.functions.aggexpr import compile_agg_expr
-from takco_spark.functions.similarity import jaro_winkler_udf
+from takco_spark.functions.aggexpr import compile_agg_expr, compile_agg_upper
+from takco_spark.functions.similarity import cosine, jaro_winkler_udf
 from takco_spark.functions.text import jaccard_tokens, levenshtein_sim
+
+# Scoring's own Jaro-Winkler UDF object, DECLARED non-deterministic although
+# the function is pure, so the optimizer may not duplicate it under a
+# pushed-down filter (guide §4.4): both scoring paths filter on UDF-derived
+# columns (`s > 0`, `agg_sim >= threshold`), and with a deterministic UDF
+# Catalyst pushes the predicate below the projection and evaluates the whole
+# matcher suite TWICE (two ArrowEvalPython nodes — measured 23 + 29
+# core-seconds in the seg-scores stage at sf0.1). Values are identical either
+# way. A second pandas_udf over the same function, because asNondeterministic
+# mutates the UDF it is called on, and the public jaro_winkler_udf stays
+# deterministic for every other caller.
+_jw_scoring = pandas_udf(jaro_winkler_udf.func, DoubleType()).asNondeterministic()
+
 
 def tfidf_weights(features: DataFrame) -> DataFrame:
     """(doc_id, tokens) → (doc_id, token, w) with L2-normalized tf-idf.
@@ -79,6 +100,35 @@ def tfidf_cosine_for_pairs(pairs: DataFrame, weights: DataFrame) -> DataFrame:
     )
 
 
+def _attach_sides(pairs: DataFrame, table: DataFrame, cols: list[str],
+                  how: str = "inner") -> DataFrame:
+    """Join the per-doc ``table`` (keyed on ``doc_id``) onto both sides of a
+    pair stream: column ``c`` arrives as ``c_1`` via ``doc_id_1`` and as
+    ``c_2`` via ``doc_id_2``.
+
+    The joins are HINTED shuffle-hash: at corpus scale a per-doc table can
+    never broadcast, and even at mid scale the broadcast build is a serial
+    driver-side cost (measured ~25s flat regardless of cores at 10^5 docs) —
+    SHJ keyed on doc_id scales with the cluster instead."""
+    for side in ("1", "2"):
+        key = f"doc_id_{side}"
+        t = table.select(F.col("doc_id").alias(key),
+                         *[F.col(c).alias(f"{c}_{side}") for c in cols])
+        pairs = pairs.join(t.hint("shuffle_hash"), key, how)
+    return pairs
+
+
+def _matchers(cfg: PipelineConfig) -> dict:
+    """The base matcher suite over a side-attached pair row (``tokens_1/2``,
+    ``name_1/2``): matcher name → Column."""
+    return {
+        "jaccard": jaccard_tokens(F.col("tokens_1"), F.col("tokens_2")),
+        "lev_sim": levenshtein_sim(
+            F.col("name_1"), F.col("name_2"), cfg.lev_max_dist_frac),
+        "jw": _jw_scoring(F.col("name_1"), F.col("name_2")),
+    }
+
+
 def score_pairs(
     pairs: DataFrame, features: DataFrame, cfg: PipelineConfig,
     embeddings: DataFrame | None = None,
@@ -99,16 +149,15 @@ def score_pairs(
     (Jaccard over the documents' embedded-media reference sets; 0 when
     either side has none). Exact-key identity, pure JVM set algebra.
     """
-    f1 = features.select(
-        F.col("doc_id").alias("doc_id_1"),
-        F.col("name").alias("name_1"),
-        F.col("tokens").alias("tokens_1"),
-    )
-    f2 = features.select(
-        F.col("doc_id").alias("doc_id_2"),
-        F.col("name").alias("name_2"),
-        F.col("tokens").alias("tokens_2"),
-    )
+    m = _matchers(cfg)
+    available = set(m)
+    if cfg.use_tfidf:
+        available.add("tfidf_cos")
+    if embeddings is not None:
+        available.add("emb_cos")
+    if media is not None:
+        available.add("media_jacc")
+
     # Re-key the NARROW pair stream before the feature joins widen each row
     # with two token arrays — repartitioning after the join would shuffle
     # ~KBs per row for no reason. No explicit partition count: a keyed
@@ -116,16 +165,9 @@ def score_pairs(
     # from coalescing and froze this stage at 2×parallelism tiny tasks —
     # measured r6 on the aligned twin of this stage: 5.2 s → 3.5 s at sf0.1
     # local[32]); the parallelismFirst floor keeps the CPU-heavy UDF stage
-    # wide. The feature joins are HINTED shuffle-hash: at corpus scale the
-    # feature table can never broadcast, and even at mid scale the broadcast
-    # build is a serial driver-side cost (measured ~25s flat regardless of
-    # cores at 10^5 docs) — SHJ keyed on doc_id scales with the cluster
-    # instead.
-    joined = (
-        pairs.repartition("doc_id_1")
-        .join(f1.hint("shuffle_hash"), "doc_id_1")
-        .join(f2.hint("shuffle_hash"), "doc_id_2")
-    )
+    # wide.
+    joined = _attach_sides(pairs.repartition("doc_id_1"), features,
+                           ["name", "tokens"])
 
     # Cheap-first gating (guide §2.3: don't compute what you throw away):
     # compute ONLY the set-level jaccard, then drop every pair whose agg
@@ -136,25 +178,9 @@ def score_pairs(
     # Jaro-Winkler Arrow batch, and the optional embedding/media joins ever
     # see them; survivors get the full matcher suite, so surviving rows are
     # byte-identical to the ungated plan.
-    available_full = {"jaccard", "lev_sim", "jw"}
-    if cfg.use_tfidf:
-        available_full.add("tfidf_cos")
-    if embeddings is not None:
-        available_full.add("emb_cos")
-    if media is not None:
-        available_full.add("media_jacc")
-    from takco_spark.functions.aggexpr import compile_agg_upper
-
-    upper = compile_agg_upper(cfg.agg_expr, available_full,
-                              available_full - {"jaccard"})
-    pre = joined.select(
-        "doc_id_1",
-        "doc_id_2",
-        "block_key",
-        "name_1",
-        "name_2",
-        jaccard_tokens(F.col("tokens_1"), F.col("tokens_2")).alias("jaccard"),
-    )
+    upper = compile_agg_upper(cfg.agg_expr, available, available - {"jaccard"})
+    pre = joined.select("doc_id_1", "doc_id_2", "block_key", "name_1",
+                        "name_2", m["jaccard"].alias("jaccard"))
     if upper is not None:
         # 1e-9 slack: a normalized score could exceed 1.0 by FP rounding
         # (e.g. an L2-normalized tfidf dot), which would shave the bound at
@@ -162,71 +188,27 @@ def score_pairs(
         # to the exact agg filter below — never drops a surviving row.
         pre = pre.where(upper >= F.lit(cfg.agg_threshold) - F.lit(1e-9))
 
-    scored = pre.select(
-        "doc_id_1",
-        "doc_id_2",
-        "block_key",
-        "jaccard",
-        levenshtein_sim(
-            F.col("name_1"), F.col("name_2"), cfg.lev_max_dist_frac
-        ).alias("lev_sim"),
-        jaro_winkler_udf(F.col("name_1"), F.col("name_2")).alias("jw"),
-    )
-
-    available = {"jaccard", "lev_sim", "jw"}
+    scored = pre.select("doc_id_1", "doc_id_2", "block_key", "jaccard",
+                        m["lev_sim"].alias("lev_sim"), m["jw"].alias("jw"))
     if cfg.use_tfidf:
-        weights = tfidf_weights(features)
-        cos = tfidf_cosine_for_pairs(pairs, weights)
+        cos = tfidf_cosine_for_pairs(pairs, tfidf_weights(features))
         scored = scored.join(cos, ["doc_id_1", "doc_id_2"], "left").withColumn(
             "tfidf_cos", F.coalesce(F.col("tfidf_cos"), F.lit(0.0))
         )
-        available.add("tfidf_cos")
     if embeddings is not None:
-        from takco_spark.functions.similarity import cosine
-
-        e1 = embeddings.select(
-            F.col("doc_id").alias("doc_id_1"), F.col("emb").alias("emb_1")
-        )
-        e2 = embeddings.select(
-            F.col("doc_id").alias("doc_id_2"), F.col("emb").alias("emb_2")
-        )
-        scored = (
-            scored.join(e1.hint("shuffle_hash"), "doc_id_1", "left")
-            .join(e2.hint("shuffle_hash"), "doc_id_2", "left")
-            .withColumn(
-                # positive cosine (reference clips at 0, embedding.py:229)
-                "emb_cos",
-                F.when(
-                    F.col("emb_1").isNotNull() & F.col("emb_2").isNotNull(),
-                    F.greatest(cosine(F.col("emb_1"), F.col("emb_2")), F.lit(0.0)),
-                ).otherwise(F.lit(0.0)),
-            )
-            .drop("emb_1", "emb_2")
-        )
-        available.add("emb_cos")
+        # positive cosine (reference clips at 0, embedding.py:229)
+        scored = _attach_sides(scored, embeddings, ["emb"], "left").withColumn(
+            "emb_cos",
+            F.when(
+                F.col("emb_1").isNotNull() & F.col("emb_2").isNotNull(),
+                F.greatest(cosine(F.col("emb_1"), F.col("emb_2")), F.lit(0.0)),
+            ).otherwise(F.lit(0.0)),
+        ).drop("emb_1", "emb_2")
     if media is not None:
-        m1 = media.select(
-            F.col("doc_id").alias("doc_id_1"), F.col("media_refs").alias("mr_1")
-        )
-        m2 = media.select(
-            F.col("doc_id").alias("doc_id_2"), F.col("media_refs").alias("mr_2")
-        )
-        union_sz = F.size(F.array_union("mr_1", "mr_2"))
-        scored = (
-            scored.join(m1.hint("shuffle_hash"), "doc_id_1", "left")
-            .join(m2.hint("shuffle_hash"), "doc_id_2", "left")
-            .withColumn(
-                "media_jacc",
-                F.when(
-                    F.col("mr_1").isNotNull() & F.col("mr_2").isNotNull()
-                    & (union_sz > 0),
-                    F.size(F.array_intersect("mr_1", "mr_2"))
-                    / union_sz.cast("double"),
-                ).otherwise(F.lit(0.0)),
-            )
-            .drop("mr_1", "mr_2")
-        )
-        available.add("media_jacc")
+        scored = _attach_sides(scored, media, ["media_refs"], "left").withColumn(
+            "media_jacc",
+            jaccard_tokens(F.col("media_refs_1"), F.col("media_refs_2")),
+        ).drop("media_refs_1", "media_refs_2")
 
     agg = compile_agg_expr(cfg.agg_expr, available)
     return scored.withColumn("agg_sim", agg).where(
@@ -235,15 +217,15 @@ def score_pairs(
 
 
 def _width_norm_expr(mode: str):
-    """total + (n1, n2) → normalized pair similarity (reference
+    """total + (n_1, n_2) → normalized pair similarity (reference
     align_width_norm, cluster.py:337-344)."""
     total = F.col("total")
     if mode == "jacc":
-        return total / (F.col("n1") + F.col("n2") - total)
+        return total / (F.col("n_1") + F.col("n_2") - total)
     if mode == "wide":
-        return total / F.greatest("n1", "n2")
+        return total / F.greatest("n_1", "n_2")
     if mode == "narrow":
-        return total / F.least("n1", "n2")
+        return total / F.least("n_1", "n_2")
     raise ValueError(f"unknown align_width_norm {mode!r}")
 
 
@@ -265,39 +247,20 @@ def aligned_segment_scores(
     projection — so it is exposed as its own function for stage-level
     attribution (bench.py --aligned-stage-run).
     """
-    s1 = seg_features.select(
-        F.col("doc_id").alias("doc_id_1"),
-        F.col("seg").alias("l"),
-        F.col("seg_name").alias("name_1"),
-        F.col("seg_tokens").alias("tokens_1"),
-    )
-    s2 = seg_features.select(
-        F.col("doc_id").alias("doc_id_2"),
-        F.col("seg").alias("r"),
-        F.col("seg_name").alias("name_2"),
-        F.col("seg_tokens").alias("tokens_2"),
-    )
+    m = _matchers(cfg)
+    segs = seg_features.select("doc_id", "seg", F.col("seg_name").alias("name"),
+                               F.col("seg_tokens").alias("tokens"))
     sub = (
         # keyed repartition with NO explicit count — AQE-coalescible (see
         # score_pairs; an explicit 2×parallelism froze this fan-out stage at
         # tiny-task granularity: measured 5.2 s → 3.5 s at sf0.1 local[32])
-        pairs.repartition("doc_id_1")
-        .join(s1.hint("shuffle_hash"), "doc_id_1")
-        .join(s2.hint("shuffle_hash"), "doc_id_2")
-        .select(
-            "doc_id_1",
-            "doc_id_2",
-            "block_key",
-            "l",
-            "r",
-            jaccard_tokens(F.col("tokens_1"), F.col("tokens_2")).alias("jaccard"),
-            levenshtein_sim(
-                F.col("name_1"), F.col("name_2"), cfg.lev_max_dist_frac
-            ).alias("lev_sim"),
-            jaro_winkler_udf(F.col("name_1"), F.col("name_2")).alias("jw"),
-        )
+        _attach_sides(pairs.repartition("doc_id_1"), segs,
+                      ["seg", "name", "tokens"])
+        .select("doc_id_1", "doc_id_2", "block_key",
+                F.col("seg_1").alias("l"), F.col("seg_2").alias("r"),
+                *[c.alias(n) for n, c in m.items()])
     )
-    seg_agg = compile_agg_expr(cfg.agg_expr, {"jaccard", "lev_sim", "jw"})
+    seg_agg = compile_agg_expr(cfg.agg_expr, set(m))
     return sub.withColumn("s", seg_agg).where(F.col("s") > 0)
 
 
@@ -356,11 +319,8 @@ def aggregate_aligned(sub: DataFrame, seg_features: DataFrame,
     )
 
     counts = seg_features.groupBy("doc_id").agg(F.count("*").alias("n"))
-    n1 = counts.select(F.col("doc_id").alias("doc_id_1"), F.col("n").alias("n1"))
-    n2 = counts.select(F.col("doc_id").alias("doc_id_2"), F.col("n").alias("n2"))
     return (
-        tot.join(n1.hint("shuffle_hash"), "doc_id_1")
-        .join(n2.hint("shuffle_hash"), "doc_id_2")
+        _attach_sides(tot, counts, ["n"])
         .withColumn("agg_sim", _width_norm_expr(cfg.align_width_norm))
         .where(F.col("agg_sim") >= F.lit(cfg.agg_threshold))
         .select("doc_id_1", "doc_id_2", "block_key", "agg_sim")

@@ -190,7 +190,6 @@ class CheckpointManager:
         name: str,
         compute: Callable[[], DataFrame],
         extra_metrics: dict | None = None,
-        repartition_by: list[str] | None = None,
     ) -> DataFrame:
         """Run-or-resume one stage.
 
@@ -198,17 +197,12 @@ class CheckpointManager:
         closure is never invoked). Otherwise run ``compute()``, persist it,
         and append per-partition lineage rows.
         """
-        path = self.stage_path(name)
         if self.exists(name):
             self._partition_metrics(name, wall_ms=0, skipped=True,
                                     extra=extra_metrics)
             return self._read_stage(name)
         t0 = time.time()
-        df = compute()
-        writer = df
-        if repartition_by:
-            writer = df.repartition(*repartition_by)
-        self._write_stage(writer, name)
+        self._write_stage(compute(), name)
         wall_ms = int((time.time() - t0) * 1000)
         self._partition_metrics(name, wall_ms=wall_ms, skipped=False,
                                 extra=extra_metrics)
@@ -253,7 +247,7 @@ class NullCheckpointManager:
     def exists(self, name: str) -> bool:
         return False
 
-    def stage(self, name, compute, extra_metrics=None, repartition_by=None):
+    def stage(self, name, compute, extra_metrics=None):
         return compute()
 
     def lineage(self) -> list[dict]:

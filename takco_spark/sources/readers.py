@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from takco_spark.spans import DOCUMENT_SCHEMA
 
 
-def widen_input(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def widen_input(df: DataFrame) -> DataFrame:
     """Defend the map side against under-partitioned input.
 
     A scan's partition count comes from the INPUT LAYOUT (file count / split
@@ -31,22 +31,18 @@ def widen_input(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     Repartition nodes (PushDownPredicates).
     """
     sc = df.sparkSession.sparkContext
-    if min_partitions:
-        target = min_partitions
-    else:
-        # one task per core (the session factory records the physical core
-        # count under this key; see its comment): the defense repartition
-        # restores parallelism on under-partitioned SMALL inputs, where
-        # per-task fixed cost — Python worker round-trips above all — makes
-        # extra waves strictly worse. On a deployment that does not set the
-        # key, defaultParallelism (= total executor cores on a vanilla
-        # cluster) is the same one-wave sizing.
-        try:
-            target = int(sc.getConf().get(
-                "spark.takco_spark.widen.partitions",
-                str(sc.defaultParallelism)))
-        except Exception:  # noqa: BLE001 — conf access never worth failing on
-            target = sc.defaultParallelism
+    # one task per core (the session factory records the physical core count
+    # under this key; see its comment): the defense repartition restores
+    # parallelism on under-partitioned SMALL inputs, where per-task fixed
+    # cost — Python worker round-trips above all — makes extra waves
+    # strictly worse. On a deployment that does not set the key,
+    # defaultParallelism (= total executor cores on a vanilla cluster) is the
+    # same one-wave sizing.
+    try:
+        target = int(sc.getConf().get(
+            "spark.takco_spark.widen.partitions", str(sc.defaultParallelism)))
+    except Exception:  # noqa: BLE001 — conf access never worth failing on
+        target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -79,13 +79,12 @@ def explode_spans(documents: DataFrame) -> DataFrame:
 MAX_NAME_LEN = 64
 
 
-def doc_text_features(documents: DataFrame, min_token_len: int = 2,
-                      max_name_len: int = MAX_NAME_LEN) -> DataFrame:
+def doc_text_features(documents: DataFrame, min_token_len: int = 2) -> DataFrame:
     """Per-document text features used by blocking and scoring:
 
     - ``name``:   all non-media span texts joined in span (offset) order —
       the comparable surface string (analog of a table's cell text stream),
-      capped at ``max_name_len`` chars (see MAX_NAME_LEN);
+      capped at MAX_NAME_LEN chars;
     - ``tokens``: distinct lowercased tokens of the non-media spans, length
       >= min_token_len (tokenization per takco's default_tokenize,
       /root/reference/takco/cluster/matchers/matcher.py:23-26: lowercase,
@@ -117,7 +116,7 @@ def doc_text_features(documents: DataFrame, min_token_len: int = 2,
         "doc_id", F.expr("array_join(transform(_os, s -> s.text), ' ')").alias("_txt")
     ).select(
         "doc_id",
-        F.expr(f"substring(_txt, 1, {int(max_name_len)})").alias("name"),
+        F.expr(f"substring(_txt, 1, {MAX_NAME_LEN})").alias("name"),
         F.expr(
             f"""array_distinct(filter(
                   split(lower(_txt), '\\\\W+'),
@@ -146,8 +145,7 @@ def doc_media_features(documents: DataFrame) -> DataFrame:
     )
 
 
-def doc_segment_features(documents: DataFrame, min_token_len: int = 2,
-                         max_name_len: int = MAX_NAME_LEN) -> DataFrame:
+def doc_segment_features(documents: DataFrame, min_token_len: int = 2) -> DataFrame:
     """Per-(doc, segment) features for ALIGNED scoring (SURVEY.md A5/J4).
 
     Segments are the document's sub-structure — the analog of a table's
@@ -208,7 +206,7 @@ def doc_segment_features(documents: DataFrame, min_token_len: int = 2,
     ).select(
         "doc_id",
         "seg",
-        F.expr(f"substring(_txt, 1, {int(max_name_len)})").alias("seg_name"),
+        F.expr(f"substring(_txt, 1, {MAX_NAME_LEN})").alias("seg_name"),
         F.expr(
             f"""array_distinct(filter(
                   split(lower(_txt), '\\\\W+'),

@@ -47,6 +47,34 @@ def test_scoring_plan_python_surface_and_repartition(spark):
     assert "codegen id" in plan
 
 
+def test_scoring_paths_evaluate_the_matcher_suite_once(spark):
+    """Both scoring paths filter on matcher-derived columns (agg_sim, s).
+    Scoring's Jaro-Winkler UDF is declared non-deterministic so Catalyst
+    cannot copy it into a pushed-down filter: exactly ONE ArrowEvalPython
+    per path (a deterministic one gives two)."""
+    import re
+
+    from takco_spark.operators.scoring import score_pairs_aligned
+
+    feats = spark.createDataFrame(
+        [("a", "alpha beta", ["alpha", "beta"]),
+         ("b", "alpha bet", ["alpha", "bet"])],
+        "doc_id string, name string, tokens array<string>",
+    )
+    seg = spark.createDataFrame(
+        [("a", 0, "alpha", ["alpha"]), ("b", 0, "alpha", ["alpha"])],
+        "doc_id string, seg int, seg_name string, seg_tokens array<string>",
+    )
+    pairs = spark.createDataFrame(
+        [("a", "b", "k")], "doc_id_1 string, doc_id_2 string, block_key string"
+    )
+    flat = score_pairs(pairs, feats, PipelineConfig())
+    aligned = score_pairs_aligned(
+        pairs, seg, PipelineConfig(aligned=True, align_mode="max1"))
+    for df in (flat, aligned):
+        assert len(re.findall(r"\(\d+\) ArrowEvalPython", _plan(df))) == 1
+
+
 def test_aligned_cap_window_shares_groupby_exchange(spark):
     """The align_max_cells top-K window partitions on the same keys as the
     per-pair aggregation, so capping adds a sort but NOT a second

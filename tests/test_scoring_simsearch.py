@@ -39,6 +39,57 @@ def test_tfidf_cosine_matches_manual(spark):
     assert ("d1", "d3") not in out  # no shared tokens → no row (sparse join)
 
 
+def test_score_pairs_optional_matchers(spark):
+    """use_tfidf + embeddings + media: the gate and the agg both see
+    tfidf_cos, emb_cos and media_jacc; a doc without an embeddings row, with
+    empty media refs or without a media row scores 0.0 on that matcher."""
+    from takco_spark.config import PipelineConfig
+    from takco_spark.operators.scoring import score_pairs
+
+    feats = spark.createDataFrame(
+        [("d1", "apple banana cherry", ["apple", "banana", "cherry"]),
+         ("d2", "apple banana durian", ["apple", "banana", "durian"]),
+         ("d3", "apple zebra", ["apple", "zebra"]),
+         ("d4", "cherry yak", ["cherry", "yak"])],
+        "doc_id string, name string, tokens array<string>",
+    )
+    emb = spark.createDataFrame(
+        [("d1", [1.0, 0.0]), ("d2", [1.0, 0.5]), ("d4", [1.0, 0.0])],
+        "doc_id string, emb array<double>",
+    )
+    media = spark.createDataFrame(
+        [("d1", ["m1", "m2"]), ("d2", ["m1"]), ("d3", [])],
+        "doc_id string, media_refs array<string>",
+    )
+    pairs = spark.createDataFrame(
+        [("d1", "d2", "k"), ("d1", "d3", "k"), ("d1", "d4", "k"),
+         ("d3", "d4", "k")],
+        "doc_id_1 string, doc_id_2 string, block_key string",
+    )
+    cfg = PipelineConfig(
+        use_tfidf=True, agg_threshold=0.2,
+        agg_expr="@max(jaccard, tfidf_cos, emb_cos, media_jacc)")
+    out = score_pairs(pairs, feats, cfg, embeddings=emb, media=media)
+    assert out.columns[-7:] == ["jaccard", "lev_sim", "jw", "tfidf_cos",
+                                "emb_cos", "media_jacc", "agg_sim"]
+    assert sorted(out.columns[:3]) == ["block_key", "doc_id_1", "doc_id_2"]
+    rows = {(r["doc_id_1"], r["doc_id_2"]): r for r in out.collect()}
+    # (d3, d4) shares nothing: every matcher 0.0, dropped by the threshold
+    assert set(rows) == {("d1", "d2"), ("d1", "d3"), ("d1", "d4")}
+
+    expected_tfidf = {
+        (r["doc_id_1"], r["doc_id_2"]): r["tfidf_cos"]
+        for r in tfidf_cosine_for_pairs(pairs, tfidf_weights(feats)).collect()}
+    for key, r in rows.items():
+        assert r["tfidf_cos"] == pytest.approx(expected_tfidf[key])
+    assert rows[("d1", "d2")]["emb_cos"] == pytest.approx(1 / math.sqrt(1.25))
+    assert rows[("d1", "d2")]["media_jacc"] == pytest.approx(0.5)
+    assert rows[("d1", "d3")]["emb_cos"] == 0.0  # d3: no embeddings row
+    assert rows[("d1", "d3")]["media_jacc"] == 0.0  # d3: empty media refs
+    assert rows[("d1", "d4")]["emb_cos"] == pytest.approx(1.0)
+    assert rows[("d1", "d4")]["media_jacc"] == 0.0  # d4: no media row
+
+
 def test_knn_brute_force_exact(spark):
     vecs = [
         (0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0]), (3, [-1.0, 0.0]),

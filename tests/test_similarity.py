@@ -43,6 +43,15 @@ def test_jw_vectorized_matches_scalar_fuzz():
         assert v == pytest.approx(jaro_winkler_py(a, b), abs=1e-9), (a, b)
 
 
+def test_jw_udf_is_deterministic():
+    """The public UDF is pure and declared so: scoring builds its own
+    non-deterministic copy (pinned in test_plans) rather than changing it."""
+    import takco_spark.operators.scoring  # noqa: F401 — must not flip it
+    from takco_spark.functions.similarity import jaro_winkler_udf
+
+    assert jaro_winkler_udf.deterministic is True
+
+
 def test_jw_symmetry_and_bounds():
     rng = np.random.RandomState(3)
     alpha = list("abcxyz")
