@@ -51,10 +51,17 @@ the min-wall estimator one more block inside the driver's window.
 
 Internal modes:
   bench.py --pipeline-run CORES NDOCS   one fresh-JVM pipeline wall
-  bench.py --stage-run CORES NDOCS      per-stage walls + compute control;
-                                        persists BENCH/stage_run_c{N}.json
-                                        (the source for the BASELINE.md
-                                        per-stage table)
+  bench.py --stage-run CORES NDOCS      one run_pipeline(trace=True) of the
+                                        default config: per-stage walls and
+                                        rows + compute control; persists
+                                        BENCH/stage_run_c{N}.json (the source
+                                        for the BASELINE.md per-stage table)
+  bench.py --aligned-stage-run CORES [NENTITIES]
+                                        the same for the aligned max1 +
+                                        refine config, on the headline
+                                        fixture or a NENTITIES scaling
+                                        corpus; persists
+                                        BENCH/aligned_stage_run_c{N}[_e*].json
 
 Choice of the N→4N pair — measured, not assumed (see BENCH/BASELINE.md):
 this host exposes 32 vCPUs over ~16 physical SMT cores and is SHARED
@@ -745,6 +752,28 @@ def _merge_cluster_legs(prev_runs: dict, lo: int, hi: int,
             meta[c] = list(old["leg_meta"].get(str(c), [])) + meta[c]
 
 
+def _bench_artifacts(pattern: str, *keys: str) -> list[tuple[str, dict]]:
+    """(filename, artifact) for the ``BENCH/<pattern>`` JSON files (name
+    order) that parse and carry every top-level ``keys`` entry their
+    renderer reads; any other file matching the glob is logged to stderr
+    and skipped, so one stray file cannot fail a whole page render."""
+    out = []
+    for p in sorted((REPO / "BENCH").glob(pattern)):
+        try:
+            d = json.loads(p.read_text())
+        except (OSError, ValueError) as e:
+            print(f"# skipping BENCH/{p.name}: {e}", file=sys.stderr)
+            continue
+        missing = [k for k in keys
+                   if not isinstance(d, dict) or k not in d]
+        if missing:
+            print(f"# skipping BENCH/{p.name}: no {', '.join(missing)}",
+                  file=sys.stderr)
+            continue
+        out.append((p.name, d))
+    return out
+
+
 def _cluster_md() -> str:
     """Executor-JVM scaling section, rendered from the persisted
     ``BENCH/cluster_scaling.json`` (same survives-re-render pattern as the
@@ -803,32 +832,11 @@ All walls: {json.dumps(d['all_walls'])}; per-leg noise:
     n_docs = next(iter(runs.values()))["n_docs"]
 
     # executor-mode per-stage attribution (bench.py --cluster-stage-run)
-    xstage = []
-    for p in sorted((REPO / "BENCH").glob("stage_run_x*.json")):
-        try:
-            xstage.append(json.loads(p.read_text()))
-        except (OSError, ValueError):
-            continue
+    xstage = [d for _, d in _bench_artifacts(
+        "stage_run_x*.json", "cores", "n_docs", "stage_walls")]
     stage_md = ""
     if xstage:
         xstage.sort(key=lambda r: r["cores"])
-        stages = ["features", "blocking", "cand_pairs", "scoring", "cc",
-                  "total", "control_jw"]
-        hdr = ("| stage | " + " | ".join(
-            f"{r['cores']} exec (s)" for r in xstage)
-            + (" | speedup |" if len(xstage) == 2 else " |"))
-        sep = "|---" * (len(xstage) + 1
-                        + (1 if len(xstage) == 2 else 0)) + "|"
-        lines = [hdr, sep]
-        for st in stages:
-            vals = [r["stage_walls"].get(st) for r in xstage]
-            row = "| " + st + " | " + " | ".join(
-                "-" if v is None else str(v) for v in vals)
-            if len(xstage) == 2 and all(vals):
-                row += f" | {round(vals[0] / vals[1], 1)}× |"
-            else:
-                row += " |"
-            lines.append(row)
         meta = "; ".join(
             f"{r['cores']} exec: {r['n_docs']} docs, "
             f"{r.get('run_date', '?')}, load {r.get('load_avg_1m', '?')}, "
@@ -838,7 +846,8 @@ All walls: {json.dumps(d['all_walls'])}; per-leg noise:
             "Same stages as the thread-mode tables above, on real executor"
             " JVMs — shows WHERE cross-process shuffle costs land (the"
             " no-shuffle JW control should match thread mode):\n\n"
-            + "\n".join(lines) + f"\n\nRuns: {meta}.\n\n")
+            + _stage_walls_table(xstage, "{} exec (s)")
+            + f"\n\nRuns: {meta}.\n\n")
     return f"""## Executor-JVM scaling evidence (local-cluster mode)
 
 The thread-mode evidence above shares one JVM across task slots; this
@@ -878,6 +887,20 @@ def _aligned_bench_corpus_path(n_entities: int) -> str:
     return f"{base}/aligned_e{n_entities}_v3_s1_seed42"
 
 
+def _aligned_bench_corpus(spark, n_entities: int, cores: int):
+    """The aligned scaling corpus (normally pre-built), read back persisted
+    and spread over ``cores * 4`` partitions."""
+    from takco_spark.datagen import synth_segmented_documents
+
+    path = _aligned_bench_corpus_path(n_entities)
+    if not os.path.exists(f"{path}/_SUCCESS"):
+        synth_segmented_documents(
+            spark, n_entities, variants=3, scramblers=1, seed=42
+        ).repartition(cores * 4).write.mode("overwrite").parquet(path)
+    return (spark.read.parquet(path).select("doc_id", "spans")
+            .repartition(cores * 4).persist())
+
+
 def _aligned_pipeline_run(cores: int, n_entities: int) -> None:
     """Child-process entry: one fresh-JVM ALIGNED-max1 pipeline run (the
     r4-verdict task-7 scaling leg — the aligned path measured above headline
@@ -885,20 +908,13 @@ def _aligned_pipeline_run(cores: int, n_entities: int) -> None:
     memory, materialized input, JVM + Python-worker warmup before the clock.
     """
     from takco_spark.config import PipelineConfig
-    from takco_spark.datagen import synth_segmented_documents
     from takco_spark.plans.pipeline import run_pipeline
     from takco_spark.session import get_spark
 
     _scale_memory_per_core(cores)
     spark = get_spark(app_name=f"bench-aligned-{cores}",
                       master=f"local[{cores}]")
-    path = _aligned_bench_corpus_path(n_entities)
-    if not os.path.exists(f"{path}/_SUCCESS"):  # normally pre-built
-        synth_segmented_documents(
-            spark, n_entities, variants=3, scramblers=1, seed=42
-        ).repartition(cores * 4).write.mode("overwrite").parquet(path)
-    docs = (spark.read.parquet(path).select("doc_id", "spans")
-            .repartition(cores * 4).persist())
+    docs = _aligned_bench_corpus(spark, n_entities, cores)
     n_docs = docs.count()
     _warm(spark, cores)
     t0 = time.time()
@@ -912,11 +928,57 @@ def _aligned_pipeline_run(cores: int, n_entities: int) -> None:
     spark.stop()
 
 
+#: stage name → stage_counts key, as the banked aligned stage runs wrote
+#: them (the per-stage table reads counts through this map)
+_STAGE_COUNT_KEY = {"blocking": "blocks", "max1_agg": "scored_pairs",
+                    "cc": "labels"}
+
+
+def _traced_stages(spark, docs, cfg, ticks0: tuple[int, int]) -> dict:
+    """One ``run_pipeline(..., trace=True)`` — the composition that really
+    runs, each stage materialized inside its ``takco:<stage>`` job group —
+    as the measured fields of a stage-run payload. ``ticks0`` is the
+    ``_cpu_ticks()`` snapshot that opens the payload's steal window."""
+    from takco_spark.plans.pipeline import run_pipeline
+
+    res = run_pipeline(spark, docs, cfg, trace=True)
+    steal1, tot1 = _cpu_ticks()  # one snapshot: steal/total deltas coherent
+    stages = res.stats["stages"]
+    walls = {k: round(v["wall_s"], 2) for k, v in stages.items()}
+    walls["total"] = round(sum(walls.values()), 2)
+    return {
+        "stage_walls": walls,
+        "stage_counts": {_STAGE_COUNT_KEY.get(k, k): v["rows"]
+                         for k, v in stages.items()},
+        "cc_iterations": res.stats["cc"]["iterations"],
+        "blocking_stats": res.stats["blocking"],
+        "run_date": time.strftime("%Y-%m-%d %H:%M UTC", time.gmtime()),
+        "load_avg_1m": round(os.getloadavg()[0], 2),
+        # host CPU-steal share during the clocked section — the VM-level
+        # noisy-neighbor signal for THIS run (load_avg alone is mostly
+        # self-load: a local[4] run sits at ~4-5 by itself)
+        "steal_pct": round(
+            100.0 * (steal1 - ticks0[0]) / max(tot1 - ticks0[1], 1), 2),
+    }
+
+
+def _bank_stage_run(spark, name: str, payload: dict) -> None:
+    """Persist a stage-run payload as ``BENCH/<name>`` (so BENCH/BASELINE.md
+    renders its tables from the dated measurement, never from a string
+    literal that rots), print it, and stop the session."""
+    bench_dir = REPO / "BENCH"
+    bench_dir.mkdir(exist_ok=True)
+    (bench_dir / name).write_text(json.dumps(payload))
+    print(json.dumps(payload))
+    spark.stop()
+
+
 def _stage_run(cores: int, n_docs: int, cluster: bool = False) -> None:
-    """Child-process entry: ONE fresh-JVM pipeline run with per-stage walls
-    (features / blocking / scoring / cc) plus a pure-compute control (the
-    batched Jaro-Winkler kernel on synthetic pairs, no shuffle) — the
-    diagnostic evidence for the N→4N scaling criterion. Prints JSON.
+    """Child-process entry: ONE fresh-JVM traced ``run_pipeline`` (default
+    config) with per-stage walls and row counts (features / blocking /
+    cand_pairs / scoring / cc) plus a pure-compute control (the batched
+    Jaro-Winkler kernel on synthetic pairs, no shuffle) — the diagnostic
+    evidence for the N→4N scaling criterion. Prints JSON.
 
     ``cluster=True`` runs the same stages on ``local-cluster[cores,1,mem]``
     (real executor JVMs) — the attribution evidence for WHERE executor-mode
@@ -926,11 +988,7 @@ def _stage_run(cores: int, n_docs: int, cluster: bool = False) -> None:
 
     from takco_spark.config import PipelineConfig
     from takco_spark.functions.similarity import jaro_winkler_udf
-    from takco_spark.operators.blocking import block_documents, candidate_pairs
-    from takco_spark.operators.components import connected_components, rechunk_oversized
-    from takco_spark.operators.scoring import score_pairs
     from takco_spark.session import get_spark
-    from takco_spark.spans import doc_text_features
 
     if cluster:
         os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
@@ -950,102 +1008,31 @@ def _stage_run(cores: int, n_docs: int, cluster: bool = False) -> None:
     docs.count()
     _warm(spark, cores)
 
-    steal0, tot0 = _cpu_ticks()
-    t: dict[str, float] = {}
-
-    def clock(name: str, fn):
-        t0 = time.time()
-        r = fn()
-        t[name] = round(time.time() - t0, 2)
-        return r
-
+    ticks0 = _cpu_ticks()
     # pure-compute control: JW over 2M synthetic string pairs, one narrow map
-    n_ctl = 2_000_000
-    ctl = spark.range(n_ctl, numPartitions=cores * 2).select(
+    ctl = spark.range(2_000_000, numPartitions=cores * 2).select(
         F.concat(F.lit("name-"), (F.col("id") % 9973).cast("string")).alias("a"),
         F.concat(F.lit("nmae-"), (F.col("id") % 9931).cast("string")).alias("b"),
     )
-    clock("control_jw", lambda: ctl.select(
-        jaro_winkler_udf("a", "b").alias("w")).agg(F.sum("w")).collect())
-
-    cfg = PipelineConfig()
-    feats = doc_text_features(docs, cfg.min_token_len).persist()
-    clock("features", feats.count)
-
-    blocks_box: dict = {}
-
-    def _run_blocking():
-        blocks, st = block_documents(feats, cfg)
-        blocks_box["blocks"] = blocks
-        blocks_box["stats"] = [s.as_dict() for s in st]
-        return blocks.count()
-
-    clock("blocking", _run_blocking)
-
-    pairs_box: dict = {}
-
-    def _run_pairs():
-        pairs = candidate_pairs(blocks_box["blocks"]).persist()
-        pairs_box["pairs"] = pairs
-        return pairs.count()
-
-    clock("cand_pairs", _run_pairs)
-
-    scored_box: dict = {}
-
-    def _run_scoring():
-        scored = score_pairs(pairs_box["pairs"], feats, cfg).persist()
-        scored_box["scored"] = scored
-        return scored.count()
-
-    clock("scoring", _run_scoring)
-
-    cc_box: dict = {}
-
-    def _run_cc():
-        edges = scored_box["scored"].select(
-            F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
-        )
-        res = connected_components(edges, cfg.max_cc_iterations)
-        cc_box["iterations"] = res.iterations
-        labels = res.labels
-        if cfg.max_cluster_size:
-            labels = rechunk_oversized(labels, cfg.max_cluster_size)
-        labels.write.format("noop").mode("overwrite").save()
-        return None
-
-    clock("cc", _run_cc)
-    t["total"] = round(sum(v for k, v in t.items() if k != "control_jw"), 2)
-    steal1, tot1 = _cpu_ticks()  # one snapshot: steal/total deltas coherent
+    t0 = time.time()
+    ctl.select(jaro_winkler_udf("a", "b").alias("w")).agg(F.sum("w")).collect()
+    control_jw = round(time.time() - t0, 2)
     payload = {
-        "cores": cores, "n_docs": n_docs, "stage_walls": t,
+        "cores": cores, "n_docs": n_docs,
         "mode": "local-cluster" if cluster else "local",
-        "cc_iterations": cc_box.get("iterations"),
-        "blocking_stats": blocks_box.get("stats"),
-        "run_date": time.strftime("%Y-%m-%d %H:%M UTC", time.gmtime()),
-        "load_avg_1m": round(os.getloadavg()[0], 2),
-        # host CPU-steal share during the clocked section — the VM-level
-        # noisy-neighbor signal for THIS run (load_avg alone is mostly
-        # self-load: a local[4] run sits at ~4-5 by itself)
-        "steal_pct": round(
-            100.0 * (steal1 - steal0) / max(tot1 - tot0, 1), 2),
+        **_traced_stages(spark, docs, PipelineConfig(), ticks0),
     }
-    # persist so BENCH/BASELINE.md renders the per-stage table from the
-    # actual measurement (dated), never from a string literal that rots
-    bench_dir = REPO / "BENCH"
-    bench_dir.mkdir(exist_ok=True)
+    payload["stage_walls"]["control_jw"] = control_jw
     prefix = "stage_run_x" if cluster else "stage_run_c"
-    (bench_dir / f"{prefix}{cores}.json").write_text(json.dumps(payload))
-    print(json.dumps(payload))
-    spark.stop()
+    _bank_stage_run(spark, f"{prefix}{cores}.json", payload)
 
 
 def _aligned_stage_run(cores: int, n_entities: int | None = None) -> None:
-    """Child-process entry: ONE fresh-JVM run of the er_pipeline_aligned_max1
-    headline path with per-stage walls (seg_features / features / blocking /
-    cand_pairs / seg_scores / max1_agg / cc / refine) — the attribution
-    evidence the r4 verdict asked for (where do the aligned headline's
-    seconds go). Prints JSON and persists to BENCH/aligned_stage_run_c*.json.
+    """Child-process entry: ONE fresh-JVM traced ``run_pipeline`` of the
+    er_pipeline_aligned_max1 headline config (max1 + refine) with per-stage
+    walls and row counts (features / blocking / cand_pairs / seg_features /
+    seg_scores / max1_agg / cc / refine) — where the aligned headline's
+    seconds go. Prints JSON and persists to BENCH/aligned_stage_run_c*.json.
 
     With ``n_entities`` given, it attributes a SCALING leg instead: same
     corpus + per-core-memory protocol as ``--aligned-pipeline-run``, so a
@@ -1054,137 +1041,38 @@ def _aligned_stage_run(cores: int, n_entities: int | None = None) -> None:
     Persisted as BENCH/aligned_stage_run_c{cores}_e{n_entities}.json.
     """
     import __spark_entry__ as entrymod
-    from pyspark.sql import functions as F
 
     from takco_spark.config import PipelineConfig
-    from takco_spark.operators.blocking import block_documents, candidate_pairs
-    from takco_spark.operators.components import (
-        connected_components,
-        rechunk_oversized,
-    )
-    from takco_spark.operators.refine import refine_clusters
-    from takco_spark.operators.scoring import (
-        aggregate_aligned,
-        aligned_segment_scores,
-    )
     from takco_spark.session import get_spark
-    from takco_spark.spans import doc_segment_features, doc_text_features
 
     # NOTE: no _scale_memory_per_core in headline mode — this run attributes
     # the HEADLINE phase's wall, so it must use the headline session's exact
-    # memory config (48g default at local[32]); the per-core scaling is the
-    # N→4N protocol's concern. (First version of this run scaled to
-    # 12g×32=384g > physical RAM and measured a 46 s features stage that is
-    # 1.5 s under the real headline config.) Scaling-leg mode (n_entities)
-    # mirrors --aligned-pipeline-run: per-core memory, bench corpus.
+    # memory config; the per-core scaling is the N→4N protocol's concern.
+    # Scaling-leg mode (n_entities) mirrors --aligned-pipeline-run: per-core
+    # memory, bench corpus.
     if n_entities is not None:
         _scale_memory_per_core(cores)
     spark = get_spark(app_name=f"aligned-stage-{cores}",
                       master=f"local[{cores}]")
     if n_entities is not None:
-        from takco_spark.datagen import synth_segmented_documents
-
-        path = _aligned_bench_corpus_path(n_entities)
-        if not os.path.exists(f"{path}/_SUCCESS"):  # normally pre-built
-            synth_segmented_documents(
-                spark, n_entities, variants=3, scramblers=1, seed=42
-            ).repartition(cores * 4).write.mode("overwrite").parquet(path)
-        docs = (spark.read.parquet(path).select("doc_id", "spans")
-                .repartition(cores * 4).persist())
+        docs = _aligned_bench_corpus(spark, n_entities, cores)
     else:
         docs = entrymod.aligned_corpus(spark, SF_DIR).select(
             "doc_id", "spans").persist()
     n_docs = docs.count()
     _warm(spark, cores)
 
-    steal0, tot0 = _cpu_ticks()
-    t: dict[str, float] = {}
-    counts: dict[str, int] = {"docs": n_docs}
-
-    def clock(name: str, fn):
-        t0 = time.time()
-        r = fn()
-        t[name] = round(time.time() - t0, 2)
-        return r
-
     cfg = PipelineConfig(aligned=True, align_mode="max1",
                          refine_threshold=0.6)
-    feats = doc_text_features(docs, cfg.min_token_len).persist()
-    counts["features"] = clock("features", feats.count)
-    segs = doc_segment_features(docs, cfg.min_token_len).persist()
-    counts["seg_features"] = clock("seg_features", segs.count)
-
-    box: dict = {}
-
-    def _run_blocking():
-        blocks, st = block_documents(feats, cfg)
-        box["blocks"] = blocks
-        box["stats"] = [s.as_dict() for s in st]
-        return blocks.count()
-
-    counts["blocks"] = clock("blocking", _run_blocking)
-
-    def _run_pairs():
-        box["pairs"] = candidate_pairs(box["blocks"]).persist()
-        return box["pairs"].count()
-
-    counts["cand_pairs"] = clock("cand_pairs", _run_pairs)
-
-    def _run_seg_scores():
-        box["sub"] = aligned_segment_scores(box["pairs"], segs, cfg).persist()
-        return box["sub"].count()
-
-    counts["seg_scores"] = clock("seg_scores", _run_seg_scores)
-
-    def _run_max1():
-        box["scored"] = aggregate_aligned(box["sub"], segs, cfg).persist()
-        return box["scored"].count()
-
-    counts["scored_pairs"] = clock("max1_agg", _run_max1)
-
-    def _run_cc():
-        edges = box["scored"].select(
-            F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst"))
-        res = connected_components(edges, cfg.max_cc_iterations)
-        box["cc_iterations"] = res.iterations
-        labels = res.labels
-        if cfg.max_cluster_size:
-            labels = rechunk_oversized(labels, cfg.max_cluster_size)
-        box["labels"] = labels.persist()
-        return box["labels"].count()
-
-    counts["labels"] = clock("cc", _run_cc)
-
-    def _run_refine():
-        guard = cfg.max_cluster_size if cfg.max_cluster_size else 1000
-        refined = refine_clusters(
-            box["labels"].select("doc_id", "cluster_id"),
-            box["scored"].select("doc_id_1", "doc_id_2", "agg_sim"),
-            threshold=cfg.refine_threshold, max_group_size=guard)
-        refined.write.format("noop").mode("overwrite").save()
-        return None
-
-    clock("refine", _run_refine)
-    t["total"] = round(sum(v for v in t.values()), 2)
-    steal1, tot1 = _cpu_ticks()  # one snapshot: steal/total deltas coherent
     payload = {
-        "cores": cores, "sf_dir": SF_DIR, "stage_walls": t,
+        "cores": cores, "sf_dir": SF_DIR,
         **({"n_entities": n_entities} if n_entities is not None else {}),
-        "stage_counts": counts,
-        "cc_iterations": box.get("cc_iterations"),
-        "blocking_stats": box.get("stats"),
-        "run_date": time.strftime("%Y-%m-%d %H:%M UTC", time.gmtime()),
-        "load_avg_1m": round(os.getloadavg()[0], 2),
-        "steal_pct": round(
-            100.0 * (steal1 - steal0) / max(tot1 - tot0, 1), 2),
+        **_traced_stages(spark, docs, cfg, _cpu_ticks()),
     }
-    bench_dir = REPO / "BENCH"
-    bench_dir.mkdir(exist_ok=True)
+    payload["stage_counts"]["docs"] = n_docs
     suffix = f"_e{n_entities}" if n_entities is not None else ""
-    (bench_dir / f"aligned_stage_run_c{cores}{suffix}.json").write_text(
-        json.dumps(payload))
-    print(json.dumps(payload))
-    spark.stop()
+    _bank_stage_run(spark, f"aligned_stage_run_c{cores}{suffix}.json",
+                    payload)
 
 
 def _state_file_count(state_dir: str) -> int:
@@ -1765,56 +1653,52 @@ def _stage_table_md() -> str:
     """Render the per-stage scaling table from persisted ``--stage-run``
     JSONs (BENCH/stage_run_c*.json) — measured, dated evidence; regenerate
     with ``bench.py --stage-run CORES NDOCS`` on a quiet window."""
-    runs = []
-    for p in sorted((REPO / "BENCH").glob("stage_run_c*.json")):
-        try:
-            runs.append(json.loads(p.read_text()))
-        except (ValueError, OSError):
-            continue
+    runs = [d for _, d in _bench_artifacts(
+        "stage_run_c*.json", "cores", "n_docs", "stage_walls")]
     if not runs:
         return (
             "No persisted stage runs found — generate with "
             "`bench.py --stage-run 1 N` and `--stage-run 4 N`.\n"
         )
     runs.sort(key=lambda r: r["cores"])
-    stages = ["features", "blocking", "cand_pairs", "scoring", "cc", "total",
-              "control_jw"]
-    hdr = "| stage | " + " | ".join(
-        f"local[{r['cores']}] (s)" for r in runs
-    ) + (" | speedup |" if len(runs) == 2 else " |")
-    sep = "|---" * (len(runs) + 1 + (1 if len(runs) == 2 else 0)) + "|"
-    lines = [hdr, sep]
-    for st in stages:
-        vals = [r["stage_walls"].get(st) for r in runs]
-        row = f"| {st} | " + " | ".join(
-            "-" if v is None else str(v) for v in vals
-        )
-        if len(runs) == 2 and all(v for v in vals):
-            row += f" | {round(vals[0] / vals[1], 1)}× |"
-        else:
-            row += " |"
-        lines.append(row)
     meta = "; ".join(
         f"local[{r['cores']}]: {r['n_docs']} docs, {r.get('run_date', '?')}, "
         f"load {r.get('load_avg_1m', '?')}" for r in runs
     )
-    return "\n".join(lines) + f"\n\nRuns: {meta}.\n"
+    return (_stage_walls_table(runs, "local[{}] (s)")
+            + f"\n\nRuns: {meta}.\n")
+
+
+def _stage_walls_table(runs: list[dict], col: str) -> str:
+    """Markdown table of flat stage-run walls: one column per run (``col``
+    formats its core count), plus the speedup when there are two runs."""
+    pair = len(runs) == 2
+    lines = [
+        "| stage | " + " | ".join(col.format(r["cores"]) for r in runs)
+        + (" | speedup |" if pair else " |"),
+        "|---" * (len(runs) + 1 + pair) + "|",
+    ]
+    for st in ("features", "blocking", "cand_pairs", "scoring", "cc",
+               "total", "control_jw"):
+        vals = [r["stage_walls"].get(st) for r in runs]
+        row = f"| {st} | " + " | ".join(
+            "-" if v is None else str(v) for v in vals)
+        lines.append(row + (f" | {round(vals[0] / vals[1], 1)}× |"
+                            if pair and all(vals) else " |"))
+    return "\n".join(lines)
 
 
 def _mem_ab_md() -> str:
     """Render every persisted 48g-vs-24g heap A/B (BENCH/mem_ab_d*.json,
     written by ``bench.py --mem-ab``) — measured, dated evidence for the
     session factory's local heap default, one block per corpus size."""
-    files = sorted((REPO / "BENCH").glob("mem_ab_d*.json"))
-    if not files:
+    found = _bench_artifacts("mem_ab_d*.json",
+                             "runs", "cores", "n_docs", "run_date")
+    if not found:
         return ("No measured heap A/B yet — generate with "
                 "`python bench.py --mem-ab 4`.\n")
     parts = []
-    for p in files:
-        try:
-            d = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
+    for _, d in found:
         rows = "\n".join(
             f"| {r['mem']} | {r['wall_s']} | {r.get('steal_pct', '-')} | "
             f"{r.get('load1', '-')} |" for r in d["runs"])
@@ -1894,11 +1778,8 @@ O(docs) (see the stage-level decomposition below).
                      f"{why}; see a prior BENCH result for the last banked "
                      "number)\n")
     runs, scale_runs = [], []
-    for p in sorted((REPO / "BENCH").glob("aligned_stage_run_c*.json")):
-        try:
-            r = json.loads(p.read_text())
-        except (ValueError, OSError):
-            continue
+    for _, r in _bench_artifacts("aligned_stage_run_c*.json",
+                                 "cores", "stage_walls"):
         (scale_runs if r.get("n_entities") else runs).append(r)
     if runs:
         r = runs[-1]
@@ -1913,7 +1794,7 @@ steal {r.get('steal_pct')}% — regenerate with `bench.py
 | stage | wall (s) | rows out |
 |---|---|---|
 """ + "\n".join(
-            f"| {k} | {v} | {counts.get(_ALIGNED_COUNT_KEY.get(k, k), '-')} |"
+            f"| {k} | {v} | {counts.get(_STAGE_COUNT_KEY.get(k, k), '-')} |"
             for k, v in walls.items()
         ) + "\n")
     # stage-level N→4N decomposition: a c1/c4 pair on a scaling corpus.
@@ -1969,27 +1850,18 @@ pipeline walls in the block table.
     return "\n".join(parts)
 
 
-#: stage name → stage_counts key for the aligned attribution table
-_ALIGNED_COUNT_KEY = {
-    "blocking": "blocks", "max1_agg": "scored_pairs", "cc": "labels",
-    "refine": "-", "total": "-",
-}
-
-
 def _incremental_md() -> str:
     """Render the incremental-vs-rerun evidence from persisted
     ``--incremental-run`` JSONs (BENCH/incremental_run_*.json) — measured,
     dated; regenerate with ``bench.py --incremental-run B D K``."""
-    files = sorted((REPO / "BENCH").glob("incremental_run_*.json"))
-    if not files:
+    found = _bench_artifacts(
+        "incremental_run_*.json", "variants", "n_batches", "docs_per_batch",
+        "total_docs", "cores", "run_date")
+    if not found:
         return ("No persisted incremental runs yet — generate with "
                 "`python bench.py --incremental-run 8 30000 4`.\n")
     parts = []
-    for p in files:
-        try:
-            d = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
+    for name, d in found:
         names = list(d["variants"])
         hdr = ("| batch | cumulative docs | " + " | ".join(
             f"{n} wall (s) | {n} files" for n in names) + " |")
@@ -2013,7 +1885,7 @@ def _incremental_md() -> str:
             + f" vs **{d.get('full_rerun_wall_s', '?')} s** — the per-arrival "
             "cost a batch-only deployment would pay. Worst per-batch steal "
             f"{worst_steal}%; full detail (per-batch noise meta) in "
-            f"`BENCH/{p.name}`.\n\nPer-batch walls have an O(corpus) floor "
+            f"`BENCH/{name}`.\n\nPer-batch walls have an O(corpus) floor "
             "by design (the label-union CC input and the full label-snapshot "
             "write grow with the corpus); the measured claim is that this "
             "floor grows far slower than the full re-run alternative, and "

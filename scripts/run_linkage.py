@@ -143,7 +143,6 @@ def run(args: argparse.Namespace) -> dict:
     the blocking cap counters and CC convergence are the operator's logged
     evidence, never silent).
     """
-    from takco_spark.operators.blocking import DeferredStats
     from takco_spark.plans.pipeline import run_pipeline
     from takco_spark.session import get_spark
 
@@ -171,9 +170,7 @@ def run(args: argparse.Namespace) -> dict:
         "config": dataclasses.asdict(cfg),
         "stats": result.stats,
     }
-    # the blocking stats are a DeferredStats proxy: emit its list of dicts
-    print(json.dumps(stats, default=lambda o: list(o)
-                     if isinstance(o, DeferredStats) else str(o)))
+    print(json.dumps(stats))
     return stats
 
 

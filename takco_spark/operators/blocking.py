@@ -312,10 +312,12 @@ def block_key_streams(
 
 def apply_block_caps(
     raw: DataFrame, cfg: PipelineConfig
-) -> tuple[DataFrame, DeferredStats]:
+) -> tuple[DataFrame, DeferredStats, list[DataFrame]]:
     """Drop oversized keys, salt hot keys of a ``(ns, block_key, doc_id)``
     key stream; returns (blocks(block_key, salt, doc_id), per-blocker
-    stats). Downstream pairing keys on (block_key, salt).
+    stats, the frames it persisted). Downstream pairing keys on
+    (block_key, salt). A caller that runs blocking once per batch
+    unpersists the frames once blocks and stats are no longer read.
 
     The blockers' key namespaces are disjoint (string mode: prefixes;
     hashed mode: the ~10⁻⁵ cross-namespace collision odds documented on
@@ -393,7 +395,7 @@ def apply_block_caps(
             "doc_id",
         )
     )
-    return out, DeferredStats(_compute_stats)
+    return out, DeferredStats(_compute_stats), [raw, sizes]
 
 
 def block_documents(
@@ -406,11 +408,12 @@ def block_documents(
 
     Returns (blocks(block_key, salt, doc_id), per-blocker stats); see
     :func:`block_key_streams` for the ``embeddings``/``media`` tables."""
-    return apply_block_caps(
+    blocks, stats, _cached = apply_block_caps(
         block_key_streams(features, cfg, embeddings, media,
                           drop_hot_tokens=True),
         cfg,
     )
+    return blocks, stats
 
 
 def bucket_pairs() -> Column:

@@ -209,6 +209,10 @@ def score_pairs(
             "media_jacc",
             jaccard_tokens(F.col("media_refs_1"), F.col("media_refs_2")),
         ).drop("media_refs_1", "media_refs_2")
+    if embeddings is not None or media is not None:
+        # the side joins' USING doc_id_2 join moved doc_id_2 first
+        scored = scored.select(
+            "doc_id_1", *[c for c in scored.columns if c != "doc_id_1"])
 
     agg = compile_agg_expr(cfg.agg_expr, available)
     return scored.withColumn("agg_sim", agg).where(
@@ -244,8 +248,8 @@ def aligned_segment_scores(
     Scale shape: the widening joins are shuffle-hash on the narrow
     repartitioned pair stream (same rationale as score_pairs). This is the
     fan-out stage — |pairs| × n1 × n2 rows pass through the matcher
-    projection — so it is exposed as its own function for stage-level
-    attribution (bench.py --aligned-stage-run).
+    projection — so it is its own function, and ``run_pipeline`` runs it
+    as its own stage (``seg_scores`` in a traced run's per-stage report).
     """
     m = _matchers(cfg)
     segs = seg_features.select("doc_id", "seg", F.col("seg_name").alias("name"),
@@ -345,11 +349,11 @@ def score_pairs_aligned(
     (doc_id_1, doc_id_2, block_key, agg_sim), agg_sim >= cfg.agg_threshold.
 
     Composition of :func:`aligned_segment_scores` (the fan-out sub-join) and
-    :func:`aggregate_aligned` (per-pair reduction) — split so stage-level
-    attribution can clock them independently. In greedy mode the per-pair
-    cell list is bounded by the count of actually-similar segment pairs, not
-    n1×n2, and additionally hard-capped at ``cfg.align_max_cells`` top-score
-    cells per pair (skew guard; exact below the cap).
+    :func:`aggregate_aligned` (per-pair reduction) — split so a traced
+    ``run_pipeline`` can clock them independently. In greedy mode the
+    per-pair cell list is bounded by the count of actually-similar segment
+    pairs, not n1×n2, and additionally hard-capped at ``cfg.align_max_cells``
+    top-score cells per pair (skew guard; exact below the cap).
     """
     sub = aligned_segment_scores(pairs, seg_features, cfg)
     return aggregate_aligned(sub, seg_features, cfg)

@@ -237,18 +237,3 @@ class CheckpointManager:
             return self.spark.read.table(self._table_ident(name))
         return self.spark.read.parquet(self.stage_path(name))
 
-
-class NullCheckpointManager:
-    """No-op stand-in when checkpointing is disabled: runs the closure."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def exists(self, name: str) -> bool:
-        return False
-
-    def stage(self, name, compute, extra_metrics=None):
-        return compute()
-
-    def lineage(self) -> list[dict]:
-        return []

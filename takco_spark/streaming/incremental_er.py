@@ -314,7 +314,8 @@ def link_batch(
     hits = old_blocks.join(
         F.broadcast(new_blocks.select("block_key").distinct()), "block_key"
     )
-    capped, _stats = apply_block_caps(new_blocks.unionByName(hits), cfg)
+    capped, _stats, block_caches = apply_block_caps(
+        new_blocks.unionByName(hits), cfg)
     # keep pairs where at least one side is NEW (old-old pairs were linked in
     # prior batches; re-scoring them is pure waste). One pass with two
     # broadcast membership joins — no self-union, no distinct.
@@ -354,6 +355,10 @@ def link_batch(
     new_edges = scored.select(
         F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
     ).localCheckpoint()
+    # the edge set is materialized: the capped key stream and its key sizes
+    # are read by nothing else this batch
+    for df in block_caches:
+        df.unpersist()
     old_labels = old_labels.persist()
     endpoints = (
         new_edges.select(F.col("src").alias("doc_id"))

@@ -6,6 +6,7 @@ leg whose probes caught a worse window than the leg itself experienced
 normalized to paired efficiency 2.09 — physically implausible, must be
 flagged rather than banked).
 """
+import json
 import sys
 from pathlib import Path
 
@@ -260,3 +261,39 @@ def test_renderers_survive_the_real_bench_dir():
                    bench._cluster_md, bench._triage_md, bench._cross_run_md):
         out = render()
         assert isinstance(out, str)
+
+
+def test_renderers_skip_artifacts_missing_their_keys(tmp_path, monkeypatch,
+                                                     capsys):
+    """A glob-matched BENCH/ file without the keys a renderer reads is
+    logged and skipped; the well-formed artifacts beside it still render."""
+    bench_dir = tmp_path / "BENCH"
+    bench_dir.mkdir()
+    good = {"cores": 4, "n_docs": 100, "stage_walls": {"features": 1.5}}
+    (bench_dir / "stage_run_c4.json").write_text(json.dumps(good))
+    (bench_dir / "stage_run_x4.json").write_text(json.dumps(good))
+    (bench_dir / "aligned_stage_run_c4.json").write_text(json.dumps(
+        {**good, "stage_counts": {"features": 100}}))
+    (bench_dir / "cluster_scaling.json").write_text(json.dumps({"runs": {
+        "1->4": {"levels": [1, 4], "wall_s": {"1": 8.0, "4": 2.5},
+                 "docs_per_sec": {"1": 12.5, "4": 40.0},
+                 "scaling_efficiency": 0.8, "all_walls": {}, "leg_meta": {},
+                 "run_date": "2026-01-01", "n_docs": 100}}}))
+    stray = {"stage_walls": {"features": 9.9}}
+    for name in ("stage_run_c9_x.json", "stage_run_x9_x.json",
+                 "aligned_stage_run_c9_x.json", "mem_ab_d9_x.json",
+                 "incremental_run_x.json"):
+        (bench_dir / name).write_text(json.dumps(stray))
+    monkeypatch.setattr(bench, "REPO", tmp_path)
+
+    assert "| features | 1.5 |" in bench._stage_table_md()
+    assert "| features | 1.5 | 100 |" in bench._aligned_md({})
+    assert bench._mem_ab_md().startswith("No measured heap A/B")
+    assert bench._incremental_md().startswith("No persisted incremental")
+    assert "| features | 1.5 |" in bench._cluster_md()
+    err = capsys.readouterr().err
+    assert "skipping BENCH/stage_run_c9_x.json: no cores" in err
+    assert "skipping BENCH/aligned_stage_run_c9_x.json: no cores" in err
+    assert "skipping BENCH/stage_run_x9_x.json: no cores" in err
+    assert "skipping BENCH/mem_ab_d9_x.json: no runs" in err
+    assert "skipping BENCH/incremental_run_x.json: no variants" in err

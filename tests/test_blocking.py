@@ -36,7 +36,7 @@ def test_hot_key_dropped_and_salted(spark):
     feats = _features(spark, n=60)  # stop-words appear in ~most of 60 docs
     raw = block_key_streams(feats, cfg, drop_hot_tokens=False)
     assert raw.columns == ["ns", "block_key", "doc_id"]
-    capped, all_stats = apply_block_caps(raw, cfg)
+    capped, all_stats, _ = apply_block_caps(raw, cfg)
     [stats] = all_stats
     assert stats.blocker == "token"
     assert stats.dropped_keys >= 1  # at least one stop-word key dropped
@@ -97,7 +97,7 @@ def test_salted_pair_loss_estimate_observable(spark):
     rows = [(0, "tok:shared", f"d{i:02d}") for i in range(12)]
     blocks = spark.createDataFrame(
         rows, "ns tinyint, block_key string, doc_id string")
-    capped, all_stats = apply_block_caps(blocks, cfg)
+    capped, all_stats, _ = apply_block_caps(blocks, cfg)
     [stats] = all_stats
     assert stats.blocker == "token" and stats.salted_keys == 1
     n, s = 12.0, 3.0

@@ -128,6 +128,11 @@ def test_pipeline_cluster_method_louvain(spark):
     f1 = pairwise_f1(res.labelled.select("doc_id", "cluster_id"), gold).f1
     assert f1 == 1.0
     assert res.stats["cc"]["converged"]
+    # the report is plain JSON; serializing it reads the deferred blocking
+    # rollup like any other read
+    import json
+
+    assert json.loads(json.dumps(res.stats))["blocking"] == res.stats["blocking"]
     # spans invariant
     orig = docs.select("doc_id", "spans")
     back = res.labelled.select("doc_id", "spans")

@@ -6,6 +6,8 @@ over pairs at shared blocking keys, thresholded, then transitive closure via a
 pure-python union-find — independent of the Spark CC implementation.
 """
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -44,6 +46,9 @@ def test_pipeline_f1_against_planted_entities(spark, corpus):
     prf = pairwise_f1(res.components, gold)
     assert prf.f1 >= 0.99, prf.as_dict()
     assert prf.precision >= 0.99 and prf.recall >= 0.99
+    # the report is plain JSON; serializing it reads the deferred blocking
+    # rollup like any other read
+    assert json.loads(json.dumps(res.stats))["blocking"] == res.stats["blocking"]
 
 
 def test_pipeline_matches_reference_semantics_golden(spark, corpus):
@@ -185,6 +190,7 @@ def test_aligned_max1_mode(spark):
     res = run_pipeline(spark, docs.select("doc_id", "spans"), cfg)
     prf = pairwise_f1(res.components, gold)
     assert prf.recall >= 0.99, prf.as_dict()
+    assert json.loads(json.dumps(res.stats))["blocking"] == res.stats["blocking"]
 
 
 def test_aligned_max1_with_refinement_full_f1(spark):
@@ -273,3 +279,49 @@ def test_header_union_same_clusters_fewer_pairs(spark, corpus):
     # docs the synth corpus already contains (they merge too — the same
     # reference semantic — and the partition above still matches)
     assert res_hu.stats["header_union"]["merged_away"] >= 80
+
+
+def _same_labels(a, b) -> bool:
+    la = a.labelled.select("doc_id", "cluster_id")
+    lb = b.labelled.select("doc_id", "cluster_id")
+    return la.exceptAll(lb).count() == 0 and lb.exceptAll(la).count() == 0
+
+
+def _check_traced(spark, docs, cfg, stage_names):
+    """A traced run reports every stage in run order with its output rows,
+    restores the caller's job group and labels exactly like an untraced
+    run, which reports no stages."""
+    sc = spark.sparkContext
+    plain = run_pipeline(spark, docs, cfg)
+    sc.setJobGroup("caller", "caller")
+    try:
+        traced = run_pipeline(spark, docs, cfg, trace=True)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert "stages" not in plain.stats
+    stages = traced.stats["stages"]
+    assert list(stages) == stage_names
+    for name, st in stages.items():
+        assert st["rows"] > 0 and st["wall_s"] >= 0, (name, st)
+    assert json.loads(json.dumps(traced.stats))["stages"] == stages
+    assert _same_labels(plain, traced)
+
+
+def test_traced_run_flat_cc(spark, corpus):
+    _check_traced(spark, corpus.select("doc_id", "spans"), _cfg(),
+                  ["features", "blocking", "cand_pairs", "scoring", "cc"])
+
+
+def test_traced_run_aligned_max1_refine(spark):
+    from takco_spark.datagen import synth_segmented_documents
+
+    docs = synth_segmented_documents(spark, 30, variants=3, scramblers=1,
+                                     seed=42).select("doc_id", "spans")
+    cfg = PipelineConfig(aligned=True, align_mode="max1",
+                         refine_threshold=0.6)
+    _check_traced(spark, docs.persist(), cfg,
+                  ["features", "blocking", "cand_pairs", "seg_features",
+                   "seg_scores", "max1_agg", "cc", "refine"])

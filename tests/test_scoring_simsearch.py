@@ -72,7 +72,7 @@ def test_score_pairs_optional_matchers(spark):
     out = score_pairs(pairs, feats, cfg, embeddings=emb, media=media)
     assert out.columns[-7:] == ["jaccard", "lev_sim", "jw", "tfidf_cos",
                                 "emb_cos", "media_jacc", "agg_sim"]
-    assert sorted(out.columns[:3]) == ["block_key", "doc_id_1", "doc_id_2"]
+    assert out.columns[:3] == ["doc_id_1", "doc_id_2", "block_key"]
     rows = {(r["doc_id_1"], r["doc_id_2"]): r for r in out.collect()}
     # (d3, d4) shares nothing: every matcher 0.0, dropped by the threshold
     assert set(rows) == {("d1", "d2"), ("d1", "d3"), ("d1", "d4")}

@@ -250,3 +250,27 @@ def test_label_snapshots_are_deltas(spark, tmp_path):
     merged = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
     assert set(merged) == {"a1", "a2", "b1"}
     assert merged["a1"] == merged["a2"] != merged["b1"]
+
+
+def test_link_batch_releases_its_caches(spark, tmp_path):
+    """A long-lived stream's cache must not grow with its age: after every
+    batch the same number of persisted RDDs is held, local checkpoints
+    aside (the JVM's context cleaner reclaims those once unreferenced, and
+    a lazy one stays unmarked when only AQE map stages read it)."""
+    from takco_spark.datagen import synth_documents
+
+    jsc = spark.sparkContext._jsc
+
+    def held() -> int:
+        return sum(1 for r in jsc.getPersistentRDDs().values()
+                   if not r.rdd().isLocallyCheckpointed())
+
+    docs = synth_documents(spark, 60, seed=5).select("doc_id", "spans")
+    rows = docs.orderBy("doc_id").collect()
+    state = str(tmp_path / "state")
+    counts = []
+    for i in range(3):
+        batch = spark.createDataFrame(rows[i * 20:(i + 1) * 20], docs.schema)
+        link_batch(spark, batch, state, i, PipelineConfig()).count()
+        counts.append(held())
+    assert counts[0] == counts[1] == counts[2], counts
