@@ -136,8 +136,3 @@ class PipelineConfig:
     run_id: str = "run0"
     # --- misc ---------------------------------------------------------------
     seed: int = 42
-
-    @property
-    def lsh_rows_per_band(self) -> int:
-        assert self.num_perm % self.lsh_bands == 0, "num_perm must divide into bands"
-        return self.num_perm // self.lsh_bands

@@ -122,7 +122,13 @@ def _signature_chunks(token_hashes: pd.Series, num_perm: int,
 
 def make_lsh_band_udf(num_perm: int, bands: int, seed: int):
     """pandas UDF: array<long> token xxhashes → array<long> of `bands` band
-    keys (None for empty docs, which therefore produce no LSH blocks)."""
+    keys (None for empty docs, which therefore produce no LSH blocks).
+    Raises ``ValueError`` at plan time unless ``bands`` divides
+    ``num_perm``."""
+    if bands <= 0 or num_perm % bands:
+        raise ValueError(
+            f"lsh_bands={bands} must divide num_perm={num_perm} into bands "
+            "of equal rows")
     a, b = minhash_params(num_perm, seed)
 
     @pandas_udf(ArrayType(LongType()))

@@ -93,7 +93,6 @@ class BlockingStats:
     total_keys: int
     dropped_keys: int
     salted_keys: int
-    candidate_rows: int
     #: estimated within-key pairs LOST to salting (pairs form only within a
     #: salt bucket, so a key of size n split into s buckets keeps ≈ n(n/s−1)/2
     #: of its n(n−1)/2 pairs) — makes the recall cost of the skew bound
@@ -366,7 +365,6 @@ def apply_block_caps(
                 total_keys=int(r["total"] or 0),
                 dropped_keys=int(r["dropped"] or 0),
                 salted_keys=int(r["salted"] or 0),
-                candidate_rows=-1,
                 salted_pairs_excluded_est=int(r["salt_excl"] or 0),
             )
             for r in srows

@@ -45,7 +45,7 @@ visited in sorted order with strictly-greater gain tie-breaks).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -162,7 +162,6 @@ def louvain_partition(
 class LouvainResult:
     labels: DataFrame  # (doc_id, cluster_id)
     cc: CCResult       # the component partition Louvain ran within
-    stats: dict = field(default_factory=dict)
 
 
 def louvain_clusters(

@@ -191,7 +191,9 @@ def score_pairs(
     scored = pre.select("doc_id_1", "doc_id_2", "block_key", "jaccard",
                         m["lev_sim"].alias("lev_sim"), m["jw"].alias("jw"))
     if cfg.use_tfidf:
-        cos = tfidf_cosine_for_pairs(pairs, tfidf_weights(features))
+        # only gated pairs: the gate bounds tfidf_cos at 1.0, so a pruned pair
+        # could not reach the threshold whatever its cosine
+        cos = tfidf_cosine_for_pairs(pre, tfidf_weights(features))
         scored = scored.join(cos, ["doc_id_1", "doc_id_2"], "left").withColumn(
             "tfidf_cos", F.coalesce(F.col("tfidf_cos"), F.lit(0.0))
         )

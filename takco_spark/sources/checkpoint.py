@@ -28,12 +28,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-class _HadoopPaths:
+class HadoopPaths:
     """Filesystem operations routed through the Hadoop FileSystem API, so a
-    checkpoint base of ``s3a://`` / ``hdfs://`` / ``file:`` behaves the same
-    as a driver-local directory (os.path-based checks silently never resume
-    on DFS URIs — exists() is always False and makedirs creates a bogus
-    local ``./s3a:/...`` tree)."""
+    base of ``s3a://`` / ``hdfs://`` / ``file:`` — or a plain path on a
+    cluster whose default FS is HDFS — behaves the same as a driver-local
+    directory (os.path-based checks silently never resume on DFS URIs —
+    exists() is always False and makedirs creates a bogus local
+    ``./s3a:/...`` tree). Shared by the stage checkpoints here and the
+    incremental stream's state dir (streaming/incremental_er.py)."""
 
     def __init__(self, spark: SparkSession):
         self._jvm = spark.sparkContext._jvm  # type: ignore[union-attr]
@@ -61,13 +63,24 @@ class _HadoopPaths:
         finally:
             out.close()
 
-    def list_files(self, dir_path: str) -> list[str]:
+    def _statuses(self, dir_path: str) -> list:
         fs = self._fs(dir_path)
         d = self._path(dir_path)
-        if not fs.exists(d):
-            return []
-        return [str(st.getPath().toString()) for st in fs.listStatus(d)
-                if st.isFile()]
+        return list(fs.listStatus(d)) if fs.exists(d) else []
+
+    def list_files(self, dir_path: str) -> list[str]:
+        return [str(st.getPath().toString())
+                for st in self._statuses(dir_path) if st.isFile()]
+
+    def list_dirs(self, dir_path: str) -> list[str]:
+        """Names of the subdirectories of ``dir_path`` (``[]`` if it is
+        missing)."""
+        return [str(st.getPath().getName())
+                for st in self._statuses(dir_path) if st.isDirectory()]
+
+    def delete(self, p: str) -> None:
+        """Delete ``p`` recursively (a no-op if it is missing)."""
+        self._fs(p).delete(self._path(p), True)
 
     def read_text(self, p: str) -> str:
         fs = self._fs(p)
@@ -102,7 +115,7 @@ class CheckpointManager:
         self.base_dir = base_dir.rstrip("/")
         self.run_id = run_id
         self.config_token = config_token
-        self._hfs = _HadoopPaths(spark)
+        self._hfs = HadoopPaths(spark)
         self._hfs.mkdirs(self.base_dir)
         self.use_iceberg = _iceberg_available(spark) and bool(
             spark.conf.get("spark.sql.catalog.takco", None)

@@ -20,6 +20,11 @@ linked INCREMENTALLY against everything seen so far —
    per-batch cost. (CC over accepted-edge union is associative:
    labels(E₁∪E₂) = labels(labels(E₁) ∪ E₂); the invariant the test pins.)
 
+That is the whole-document, plain-CC pipeline: ``link_batch`` rejects a cfg
+with ``aligned=True``, a ``refine_threshold``, ``cluster_method != "cc"`` or
+``header_union=True`` before it writes any state, and does not rechunk
+oversized clusters (``max_cluster_size``).
+
 State layout (``state_dir``; parquet in the sandbox, Iceberg tables at
 cluster scale — same downgrade story as sources/checkpoint.py). EVERY write
 targets a ``batch=<id>`` directory, so a foreachBatch REPLAY after a crash
@@ -40,10 +45,15 @@ parquet-level stand-in for Iceberg snapshot isolation):
                            stream age; readers merge-on-read via
                            latest_labels, newest batch per doc wins)
     {features,blocks,labels}/_base/epoch=<k>/  compacted state <= k
-                           (written by compact_state; readers prefer the
-                           newest complete epoch below their replay horizon
-                           and only scan deltas ABOVE it — for labels the
-                           epoch is the fully-merged snapshot as of k)
+                           (written by compact_state; for labels the epoch
+                           is the fully-merged snapshot as of k)
+
+One reader, ``_read_state``, holds the visibility rule for all three: the
+newest complete epoch below the replay horizon plus the complete deltas
+ABOVE it ("complete" = the dir carries ``_SUCCESS``). ``state_dir`` may be
+any Hadoop FS path — a local directory, ``file://``, ``hdfs://`` or
+``s3a://`` — because every listing and delete goes through
+sources/checkpoint.HadoopPaths, like the stage checkpoints.
 
 Without compaction the per-batch read fan-in grows O(#batches) — file
 listings, parquet footers, and union width all scale with stream age, which
@@ -58,10 +68,11 @@ web-scale ingestion, like streaming/ingest.py.
 
 from __future__ import annotations
 
-import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from takco_spark.config import PipelineConfig
 from takco_spark.operators.blocking import (
@@ -71,73 +82,69 @@ from takco_spark.operators.blocking import (
 )
 from takco_spark.operators.components import connected_components
 from takco_spark.operators.scoring import score_pairs
+from takco_spark.sources.checkpoint import HadoopPaths
 from takco_spark.spans import DOCUMENT_SCHEMA, doc_media_features, doc_text_features
 
 
-def _read_deltas(spark: SparkSession, root: str, schema: str,
-                 before_batch: int) -> DataFrame:
-    """State visible to a batch: the newest complete ``_base/epoch=<k>``
-    with k < before_batch (if any), plus the batch=<id> delta dirs with
-    epoch < id < before_batch. A crashed later batch's half-written dir has
-    no _SUCCESS and is invisible to the replay that must not see it; a
-    half-finished compaction is likewise invisible (epoch commits via its
-    own _SUCCESS, and leftover deltas <= epoch are simply ignored)."""
-    epochs = [e for e in _epoch_ids(f"{root}/_base") if e < before_batch]
+def _complete_ids(fs: HadoopPaths, root: str, prefix: str) -> list[int]:
+    """Sorted ids of the ``<prefix><id>`` subdirectories of ``root`` that
+    carry a ``_SUCCESS`` marker (committed writes)."""
+    return sorted(
+        int(name.split("=", 1)[1]) for name in fs.list_dirs(root)
+        if name.startswith(prefix) and fs.exists(f"{root}/{name}/_SUCCESS")
+    )
+
+
+def _read_state(spark: SparkSession, root: str, schema: StructType | str,
+                before_batch: int | None) -> DataFrame:
+    """The state under ``root`` visible strictly before ``before_batch``
+    (all of it when None): the newest complete ``_base/epoch=<k>`` below the
+    horizon plus the complete ``batch=<id>`` deltas above k, each row tagged
+    ``_b`` with the epoch or batch that wrote it. A crashed later batch's
+    half-written dir has no _SUCCESS and is invisible to the replay that must
+    not see it; a half-finished compaction is likewise invisible (an epoch
+    commits via its own _SUCCESS, and leftover deltas <= k are ignored).
+    ``schema`` types the empty state of a stream's first batch."""
+    fs = HadoopPaths(spark)
+
+    def visible(i: int) -> bool:
+        return before_batch is None or i < before_batch
+
+    epochs = [e for e in _complete_ids(fs, f"{root}/_base", "epoch=")
+              if visible(e)]
     base = max(epochs) if epochs else None
-    deltas = [
-        i for i in _batch_ids(root)
-        if i < before_batch and (base is None or i > base)
-    ]
+    deltas = [i for i in _complete_ids(fs, root, "batch=")
+              if visible(i) and (base is None or i > base)]
     parts = []
     if base is not None:
-        parts.append(spark.read.parquet(f"{root}/_base/epoch={base}"))
+        parts.append(spark.read.parquet(f"{root}/_base/epoch={base}")
+                     .withColumn("_b", F.lit(base)))
     if deltas:
         parts.append(
             spark.read.option("basePath", root)
             .parquet(*[f"{root}/batch={i}" for i in deltas])
-            .drop("batch")
+            .withColumn("_b", F.col("batch").cast("int")).drop("batch")
         )
     if not parts:
-        return spark.createDataFrame([], schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _complete_ids(root: str, prefix: str) -> list[int]:
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for e in os.scandir(root):
-        if e.is_dir() and e.name.startswith(prefix) and os.path.exists(
-            os.path.join(e.path, "_SUCCESS")
-        ):
-            out.append(int(e.name.split("=", 1)[1]))
-    return sorted(out)
-
-
-def _batch_ids(root: str) -> list[int]:
-    return _complete_ids(root, "batch=")
-
-
-def _epoch_ids(base_root: str) -> list[int]:
-    return _complete_ids(base_root, "epoch=")
+        return spark.createDataFrame([], schema).withColumn(
+            "_b", F.lit(None).cast("int"))
+    return reduce(DataFrame.unionByName, parts)
 
 
 def compact_state(spark: SparkSession, state_dir: str,
                   through_batch: int | None = None) -> dict:
-    """Compact the incremental-linkage state THROUGH a batch id: merge all
-    feature/block deltas with id <= through into one ``_base/epoch=<k>``
-    dir each, then drop the merged deltas, older epochs, and label
-    snapshots below k. The parquet stand-in for Iceberg's
-    ``rewrite_data_files`` + ``expire_snapshots`` maintenance pair.
+    """Compact the incremental-linkage state THROUGH a batch id: fold every
+    feature, block and label delta with id <= k into one
+    ``_base/epoch=<k>`` dir each (for labels the fully-merged view of
+    :func:`latest_labels`), then drop the folded deltas and older epochs.
+    The parquet stand-in for Iceberg's ``rewrite_data_files`` +
+    ``expire_snapshots`` maintenance pair.
 
-    Default ``through_batch`` is the SECOND-newest complete label snapshot:
+    Default ``through_batch`` is the SECOND-newest complete label delta:
     Structured Streaming can only replay the batch after its last committed
     offset (the newest one here), and that replay must still be able to read
     state strictly below itself — so the newest batch is never folded in.
-    Passing an explicit ``through_batch`` >= the newest label snapshot is
+    Passing an explicit ``through_batch`` >= the newest label delta is
     rejected for the same reason.
 
     Crash-safe at every point: the epoch write commits via its _SUCCESS
@@ -145,7 +152,8 @@ def compact_state(spark: SparkSession, state_dir: str,
     dead weight readers already skip — the deletion phase is pure cleanup
     and idempotent. Re-running with the same k short-circuits the write.
     """
-    label_ids = _batch_ids(f"{state_dir}/labels")
+    fs = HadoopPaths(spark)
+    label_ids = _complete_ids(fs, f"{state_dir}/labels", "batch=")
     if through_batch is None:
         if len(label_ids) < 2:
             return {"compacted_through": None, "reason": "nothing to compact"}
@@ -159,88 +167,50 @@ def compact_state(spark: SparkSession, state_dir: str,
             f"refusing to compact through the newest batch {label_ids[-1]} "
             "— a streaming replay of it could no longer read prior state")
 
-    import shutil
-
     stats: dict = {"compacted_through": k}
-    for sub in ("features", "blocks"):
+    for sub in ("features", "blocks", "labels"):
         root = f"{state_dir}/{sub}"
-        base_root = f"{root}/_base"
-        delta_ids = [i for i in _batch_ids(root) if i <= k]
-        epoch_ids = _epoch_ids(base_root)
-        if k not in epoch_ids:
-            if not delta_ids and not epoch_ids:
-                stats[sub] = {"deltas_merged": 0, "skipped": True}
-                continue
-            # schema arg is only used for the no-input case, excluded above
-            merged = _read_deltas(spark, root, "doc_id string", k + 1)
-            merged.write.mode("overwrite").parquet(f"{base_root}/epoch={k}")
-        stats[sub] = {"deltas_merged": len(delta_ids),
-                      "epochs_dropped": len([e for e in epoch_ids if e < k])}
-        for i in delta_ids:
-            shutil.rmtree(f"{root}/batch={i}", ignore_errors=True)
-        for e in epoch_ids:
-            if e < k:
-                shutil.rmtree(f"{base_root}/epoch={e}", ignore_errors=True)
-    # labels: fold every delta <= k into one fully-merged snapshot
-    # ``labels/_base/epoch=<k>`` (merge-on-read readers then scan one epoch
-    # plus the deltas above it), then drop the folded deltas and older
-    # epochs. The epoch commits via its _SUCCESS before any delete, and the
-    # newest delta (k is at most the second-newest) stays untouched, so a
-    # crash-replay of the newest batch still reads valid state < itself.
-    lbl_base = f"{state_dir}/labels/_base"
-    if k not in _epoch_ids(lbl_base):
-        latest_labels(spark, state_dir, before_batch=k + 1).write.mode(
-            "overwrite"
-        ).parquet(f"{lbl_base}/epoch={k}")
-    dropped = [i for i in label_ids if i < k]
-    for i in dropped:
-        shutil.rmtree(f"{state_dir}/labels/batch={i}", ignore_errors=True)
-    for e in _epoch_ids(lbl_base):
-        if e < k:
-            shutil.rmtree(f"{lbl_base}/epoch={e}", ignore_errors=True)
-    stats["label_snapshots_dropped"] = len(dropped)
+        merged = [i for i in _complete_ids(fs, root, "batch=") if i <= k]
+        epochs = _complete_ids(fs, f"{root}/_base", "epoch=")
+        if not merged and not epochs:
+            stats[sub] = {"deltas_merged": 0, "skipped": True}
+            continue
+        if k not in epochs:
+            view = (latest_labels(spark, state_dir, before_batch=k + 1)
+                    if sub == "labels"
+                    # the schema only types an empty state, excluded above
+                    else _read_state(spark, root, "doc_id string", k + 1)
+                    .drop("_b"))
+            view.write.mode("overwrite").parquet(f"{root}/_base/epoch={k}")
+        # labels keep their delta k: it is what a re-run with the same k
+        # validates against
+        dropped = [i for i in merged if i < k or sub != "labels"]
+        old_epochs = [e for e in epochs if e < k]
+        for i in dropped:
+            fs.delete(f"{root}/batch={i}")
+        for e in old_epochs:
+            fs.delete(f"{root}/_base/epoch={e}")
+        if sub == "labels":
+            stats["label_snapshots_dropped"] = len(dropped)
+        else:
+            stats[sub] = {"deltas_merged": len(merged),
+                          "epochs_dropped": len(old_epochs)}
     return stats
 
 
 def latest_labels(spark: SparkSession, state_dir: str,
                   before_batch: int | None = None) -> DataFrame:
     """The merged label view (strictly before ``before_batch`` when given —
-    what a replayed batch must read): newest complete ``_base/epoch=<k>``
-    full snapshot plus every per-batch DELTA above it, reduced to each doc's
-    latest assignment (the newest batch id wins — a doc appears in at most
-    one row per delta, so the reduction is deterministic). r6: label state
-    is written O(delta) per batch (see :func:`link_batch`); this view is the
-    merge-on-read side of that trade."""
-    root = f"{state_dir}/labels"
-    epochs = [e for e in _epoch_ids(f"{root}/_base")
-              if before_batch is None or e < before_batch]
-    base = max(epochs) if epochs else None
-    ids = [
-        i for i in _batch_ids(root)
-        if (before_batch is None or i < before_batch)
-        and (base is None or i > base)
-    ]
-    parts = []
-    if base is not None:
-        parts.append(
-            spark.read.parquet(f"{root}/_base/epoch={base}")
-            .select("doc_id", "cluster_id", F.lit(base).alias("_b"))
-        )
-    if ids:
-        parts.append(
-            spark.read.option("basePath", root)
-            .parquet(*[f"{root}/batch={i}" for i in ids])
-            .select("doc_id", "cluster_id",
-                    F.col("batch").cast("int").alias("_b"))
-        )
-    if not parts:
-        return spark.createDataFrame([], "doc_id string, cluster_id string")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.groupBy("doc_id").agg(
-        F.max_by("cluster_id", "_b").alias("cluster_id")
-    )
+    what a replayed batch must read): the visible label state of
+    :func:`_read_state` reduced to each doc's latest assignment (the newest
+    batch id wins — a doc appears in at most one row per delta, so the
+    reduction is deterministic). Label state is written O(delta) per batch
+    (see :func:`link_batch`); this view is the merge-on-read side of that
+    trade."""
+    return _read_state(
+        spark, f"{state_dir}/labels", "doc_id string, cluster_id string",
+        before_batch,
+    ).groupBy("doc_id").agg(F.max_by("cluster_id", "_b").alias("cluster_id"))
 
 
 def link_batch(
@@ -257,18 +227,27 @@ def link_batch(
     incremental loads (e.g. a nightly delta) — the streaming entry point
     below just wires it to a readStream source. ``batch_id`` must be
     strictly increasing across calls (Structured Streaming guarantees it).
+
+    A cfg asking for aligned scoring, refine, Louvain or header unions raises
+    ``ValueError`` before anything is written; oversized clusters are not
+    rechunked (``max_cluster_size`` is ignored).
     """
     cfg = cfg or PipelineConfig(blockers=("token",))
-    media_on = cfg.use_media or "media" in cfg.blockers
+    unsupported = [name for name, on in (
+        ("aligned=True", cfg.aligned),
+        ("refine_threshold", cfg.refine_threshold is not None),
+        (f"cluster_method={cfg.cluster_method!r}", cfg.cluster_method != "cc"),
+        ("header_union=True", cfg.header_union),
+    ) if on]
+    if unsupported:
+        raise ValueError(
+            f"link_batch does not implement {', '.join(unsupported)}; the "
+            "stream links whole documents with connected components")
     # the feature delta carries media_refs when the media matcher/blocker is
     # on (old docs' refs must survive into later batches' scoring joins);
     # cfg must be stable across a state_dir's batches — same contract as the
     # checkpoint manager's config token in the batch pipeline
-    feat_schema = ("doc_id string, name string, tokens array<string>"
-                   + (", media_refs array<string>" if media_on else ""))
-    block_schema = ("ns tinyint, block_key "
-                    + ("bigint" if cfg.hashed_keys else "string")
-                    + ", doc_id string")
+    media_on = cfg.use_media or "media" in cfg.blockers
 
     # -- write this batch's feature/block deltas FIRST (idempotent per-batch
     # dirs), then operate on the parquet-backed reads: clean scan plans (no
@@ -300,10 +279,11 @@ def link_batch(
     ).parquet(f"{state_dir}/blocks/batch={batch_id}")
     new_blocks = spark.read.parquet(f"{state_dir}/blocks/batch={batch_id}")
 
-    old_feats = _read_deltas(spark, f"{state_dir}/features", feat_schema,
-                             batch_id)
-    old_blocks = _read_deltas(spark, f"{state_dir}/blocks", block_schema,
-                              batch_id)
+    # a first batch sees empty state typed like its own deltas
+    old_feats = _read_state(spark, f"{state_dir}/features", new_feats.schema,
+                            batch_id).drop("_b")
+    old_blocks = _read_state(spark, f"{state_dir}/blocks", new_blocks.schema,
+                             batch_id).drop("_b")
     old_labels = latest_labels(spark, state_dir, before_batch=batch_id)
 
     # -- blocking: new-vs-new from the batch's own keys; new-vs-old via the

@@ -90,6 +90,52 @@ def test_score_pairs_optional_matchers(spark):
     assert rows[("d1", "d4")]["media_jacc"] == 0.0  # d4: no media row
 
 
+def test_tfidf_cosine_runs_on_gated_pairs_only(spark, monkeypatch):
+    """use_tfidf computes the cosine only for pairs that pass the cheap
+    jaccard gate; the gate bounds tfidf_cos at 1.0, so the output is the
+    same as scoring every candidate."""
+    from takco_spark.config import PipelineConfig
+    from takco_spark.operators import scoring
+
+    seen = []
+
+    def counting(pairs, weights):
+        seen.append(pairs.count())
+        return tfidf_cosine_for_pairs(pairs, weights)
+
+    monkeypatch.setattr(scoring, "tfidf_cosine_for_pairs", counting)
+    feats = spark.createDataFrame(
+        [("d1", "apple banana cherry", ["apple", "banana", "cherry"]),
+         ("d2", "apple banana durian", ["apple", "banana", "durian"]),
+         ("d3", "apple zebra", ["apple", "zebra"]),
+         ("d4", "cherry yak", ["cherry", "yak"])],
+        "doc_id string, name string, tokens array<string>",
+    )
+    pairs = spark.createDataFrame(
+        [("d1", "d2", "k"), ("d1", "d3", "k"), ("d1", "d4", "k"),
+         ("d3", "d4", "k")],
+        "doc_id_1 string, doc_id_2 string, block_key string",
+    )
+    # upper bound min(jaccard, 1.0) >= 0.2: (d3, d4) shares no token and is
+    # pruned before the TF-IDF join
+    cfg = PipelineConfig(use_tfidf=True, agg_threshold=0.2,
+                         agg_expr="@min(jaccard, tfidf_cos)")
+    out = scoring.score_pairs(pairs, feats, cfg)
+    got = {(r["doc_id_1"], r["doc_id_2"]): r["agg_sim"] for r in out.collect()}
+    assert seen == [3] and pairs.count() == 4
+
+    cos = {(r["doc_id_1"], r["doc_id_2"]): r["tfidf_cos"]
+           for r in tfidf_cosine_for_pairs(
+               pairs, tfidf_weights(feats)).collect()}
+    jacc = {("d1", "d2"): 0.5, ("d1", "d3"): 0.25, ("d1", "d4"): 0.25,
+            ("d3", "d4"): 0.0}
+    expected = {k: min(j, cos.get(k, 0.0)) for k, j in jacc.items()}
+    expected = {k: v for k, v in expected.items() if v >= 0.2}
+    assert len(expected) == 3 and got.keys() == expected.keys()
+    for k, v in expected.items():
+        assert got[k] == pytest.approx(v)
+
+
 def test_knn_brute_force_exact(spark):
     vecs = [
         (0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0]), (3, [-1.0, 0.0]),

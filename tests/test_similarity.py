@@ -8,6 +8,7 @@ from takco_spark.functions.similarity import (
     _minhash_matrix,
     jaro_winkler_np,
     jaro_winkler_py,
+    make_lsh_band_udf,
     minhash_params,
 )
 
@@ -95,3 +96,10 @@ def test_minhash_identical_sets_full_match():
     h = np.arange(50, dtype=np.uint64) * np.uint64(2654435761)
     sigs = _minhash_matrix(np.concatenate([h, h]), np.array([0, 50]), a, b)
     assert (sigs[0] == sigs[1]).all()
+
+
+def test_lsh_bands_must_divide_num_perm():
+    """An uneven band split fails when the UDF is built, not inside a Python
+    worker's reshape."""
+    with pytest.raises(ValueError, match="lsh_bands=32 must divide num_perm=100"):
+        make_lsh_band_udf(100, 32, seed=1)

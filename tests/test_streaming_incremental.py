@@ -2,6 +2,7 @@
 cluster merge, replay idempotency (streaming/incremental_er.py)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from takco_spark.config import PipelineConfig
 from takco_spark.plans.pipeline import run_pipeline
@@ -26,10 +27,17 @@ def _cfg():
     return PipelineConfig(blockers=("token",), agg_threshold=0.5)
 
 
-def test_incremental_matches_batch_rerun(spark, tmp_path):
+#: a state dir given as a plain path and as a Hadoop FS URI: both must see
+#: the prior state
+STATE_URI = pytest.mark.parametrize("scheme", ["", "file://"],
+                                    ids=["path", "file_uri"])
+
+
+@STATE_URI
+def test_incremental_matches_batch_rerun(spark, tmp_path, scheme):
     """CC-over-union associativity: linking in 3 increments must produce the
     same clusters as one batch run over the full corpus."""
-    state = str(tmp_path / "state")
+    state = scheme + str(tmp_path / "state")
     a1 = _doc(spark, "a1", "alpha beta gamma|rotterdam")
     a2 = _doc(spark, "a2", "alpha beta gamma|rotterdam x")
     b1 = _doc(spark, "b1", "delta epsilon zeta|utrecht")
@@ -162,26 +170,34 @@ def test_incremental_multi_blocker_matches_batch(spark, tmp_path):
     assert len(set(batch_labels.values())) == 1
 
 
-def test_incremental_rejects_unsupported_blocker(spark, tmp_path):
-    import pytest
-
-    cfg = PipelineConfig(blockers=("embedding",))
+@pytest.mark.parametrize("cfg,match", [
+    (PipelineConfig(blockers=("embedding",)), "embedding"),
+    (PipelineConfig(aligned=True), "aligned"),
+    (PipelineConfig(refine_threshold=0.6), "refine_threshold"),
+    (PipelineConfig(cluster_method="louvain"), "cluster_method"),
+    (PipelineConfig(header_union=True), "header_union"),
+], ids=["embedding", "aligned", "refine", "louvain", "header_union"])
+def test_incremental_rejects_unsupported_blocker(spark, tmp_path, cfg, match):
+    """Blockers and clustering configs the stream does not implement raise
+    instead of silently linking with whole-document scoring and plain CC."""
     d = _media_doc(spark, "x", "aaa", ["m1"])
-    with pytest.raises(ValueError, match="embedding"):
+    with pytest.raises(ValueError, match=match):
         link_batch(spark, d, str(tmp_path / "s"), 0, cfg)
     # rejected before any state write: no feature delta a later batch
     # could read without its blocks and labels
     assert not (tmp_path / "s" / "features" / "batch=0").exists()
 
 
-def test_compact_state_preserves_linkage(spark, tmp_path):
+@STATE_URI
+def test_compact_state_preserves_linkage(spark, tmp_path, scheme):
     """Compaction through batch 1: same labels before/after, the NEXT batch
     links identically against the compacted state (epoch read path), delta
     dirs are physically gone, and re-compacting is an idempotent no-op."""
     from takco_spark.streaming.incremental_er import compact_state
 
-    plain = str(tmp_path / "plain")
-    comp = str(tmp_path / "comp")
+    plain = scheme + str(tmp_path / "plain")
+    comp_path = str(tmp_path / "comp")
+    comp = scheme + comp_path
     batches = [
         _doc(spark, "a1", "alpha beta gamma|rotterdam"),
         _doc(spark, "b1", "delta epsilon zeta|utrecht"),
@@ -200,8 +216,8 @@ def test_compact_state_preserves_linkage(spark, tmp_path):
     import glob
     assert (sorted(map(tuple, latest_labels(spark, comp).collect()))
             == sorted(map(tuple, latest_labels(spark, plain).collect())))
-    assert glob.glob(f"{comp}/features/batch=0") == []  # delta gone
-    assert len(glob.glob(f"{comp}/features/_base/epoch=0/_SUCCESS")) == 1
+    assert glob.glob(f"{comp_path}/features/batch=0") == []  # delta gone
+    assert len(glob.glob(f"{comp_path}/features/_base/epoch=0/_SUCCESS")) == 1
 
     # the bridge batch produces the SAME result over compacted state
     lp = sorted(map(tuple, link_batch(spark, batches[2], plain, 2, _cfg()).collect()))
@@ -214,8 +230,8 @@ def test_compact_state_preserves_linkage(spark, tmp_path):
     replay = sorted(map(tuple, link_batch(spark, batches[2], comp, 2, _cfg()).collect()))
     assert replay == lc
     # label snapshots below the compaction point are pruned
-    assert glob.glob(f"{comp}/labels/batch=0") == []
-    assert len(glob.glob(f"{comp}/labels/batch=2/_SUCCESS")) == 1
+    assert glob.glob(f"{comp_path}/labels/batch=0") == []
+    assert len(glob.glob(f"{comp_path}/labels/batch=2/_SUCCESS")) == 1
 
 
 def test_compact_state_refuses_newest_batch(spark, tmp_path):
